@@ -855,9 +855,10 @@ def _headline_fold_child(runs: int) -> None:
 
 
 def _fresh_jvm_fold(runs: int) -> "dict | None":
-    """Run one headline fold in a subprocess; None if it failed (the
-    caller falls back to an in-session fold so the bench always
-    completes and prints its one-line contract)."""
+    """Run one headline fold in a subprocess; None if it failed, in
+    which case the diagnostic fold is simply omitted (there is no
+    in-session fallback) and the bench still prints its one-line
+    contract."""
     import subprocess
 
     try:

@@ -475,6 +475,7 @@ def geohash_bucket_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST({_sql_salted_mod('eacc:', 'event_id', 3)} * 50 AS DOUBLE)
                        AS accuracy
             FROM events
+            WHERE event_type IS NOT NULL
         ), dedup AS (
             SELECT *, row_number() OVER (
                        PARTITION BY user_id, lat, lng, accuracy
@@ -563,8 +564,8 @@ def _geotag_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The two union inputs partition the SAME projection into
     complementary ``event_type`` subsets — the union is exactly the
-    whole projection, but expressed as two scans + two md5 derivations
-    Catalyst cannot fuse. Round 15 collapses it to ONE scan + one
+    projection of the non-NULL ``event_type`` rows, but expressed as
+    two scans + two md5 derivations Catalyst cannot fuse. Round 15 collapses it to ONE scan + one
     derivation feeding the single user_id exchange
     :func:`_geotag_merge`'s two windows share. Row ORDER differs from
     the literal union; both consumers are window row_numbers with
@@ -580,7 +581,11 @@ def _geotag_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan that order would serialize the derivation, so there the raw
     rows are keyed-spread FIRST (pinned width) and derived above —
     0.67 vs 0.92 s at sf0.1. One keyed exchange either way."""
-    ev = load_table(spark, "events", sf_dir)
+    # state (!= 'purchase') ∪ batch (== 'purchase') drops NULL
+    # event_type rows, as the bucketed arm's two filters do
+    ev = load_table(spark, "events", sf_dir).filter(
+        col("event_type").isNotNull()
+    )
     par = spark.sparkContext.defaultParallelism
     if (
         os.environ.get("SPARK_GRAFT_SCAN_SPREAD", "") != "0"

@@ -1883,8 +1883,6 @@ def update_emb_pair_graph(
     n_buckets: int = 16,
     auto_compact: bool = True,
     multiprobe: bool = False,
-    compact_debt_bits: int = 0,
-    async_reband: bool = False,
 ) -> None:
     """Extend the persisted embedding near-dup graph with one shard of
     new vectors — serving parity for the dedup family (the ANN queries
@@ -1950,33 +1948,6 @@ def update_emb_pair_graph(
        standing occupancy debt only degrades candidate-join cost,
        never correctness. ``auto_compact=False`` is exactly the
        round-9 behavior (WARN and leave it to the runbook).
-
-       Between the two extremes sits ``compact_debt_bits`` (round 12):
-       the auto trigger fires only once the adaptive width exceeds
-       the pinned one by MORE than this many bits. Each deferred bit
-       lets bucket occupancy drift to 2^debt × the ~cap/2 target
-       (more candidates per shard — recall can only go UP, quiet-
-       shard cost grows with occupancy), in exchange for (debt+1)×
-       fewer re-band stalls over the store's lifetime: boundary
-       shards — the p99 outliers — become geometrically rarer while
-       amortized cost is unchanged. The worst-case SINGLE stall is
-       still O(n_unique at trigger time); debt defers it, it does not
-       shrink it. Measured ladder:
-       emb_recall.json["compaction_debt"] / SCALE.md.
-
-       ``async_reband=True`` (round 13) SHRINKS the worst stall
-       instead of deferring it: the boundary shard launches the
-       O(n_unique) re-band into a STAGING generation on a background
-       thread (:func:`stage_emb_pair_graph_reband` — the old
-       generation keeps serving and ingesting), and a later trigger
-       absorbs only the O(delta) catch-up + atomic meta swap
-       (:func:`finalize_emb_pair_graph_reband`). Until the swap the
-       store runs at the same occupancy debt as ``compact_debt_bits``
-       (recall can only go UP); crash anywhere is safe — pre-marker
-       leaves an orphan the next stage clears, post-marker is
-       recovered by finalize. Composes with ``compact_debt_bits``
-       (debt defers the trigger, async shrinks the stall). Measured
-       ladder: emb_recall.json["compaction_async"] / SCALE.md.
 
     Per-shard WRITE I/O is O(batch): the log arm appends
     one segment per table instead of rewriting the accumulated state
@@ -2262,18 +2233,8 @@ def update_emb_pair_graph(
     # auto re-band AFTER the shard's atomic commit (docstring: the
     # LSM-trigger discipline) — a crash inside compaction cannot lose
     # or double-fold shard state, only defer the re-band.
-    # compact_debt_bits defers the trigger past the boundary by that
-    # many width-bits (docstring: the p99-vs-occupancy trade).
-    # async_reband (round 13) replaces the synchronous O(n_unique)
-    # stall with staging in a background thread + an O(delta) catch-up
-    # swap on a later trigger (docstrings at stage/finalize).
-    if auto_compact and auto_emb_bits(total_unique) > n_bits + compact_debt_bits:
-        if async_reband:
-            _advance_async_reband(spark, store_dir, table_prefix, n_buckets)
-        else:
-            compact_emb_pair_graph(
-                spark, store_dir, table_prefix, n_buckets=n_buckets
-            )
+    if auto_compact and auto_emb_bits(total_unique) > n_bits:
+        compact_emb_pair_graph(spark, store_dir, table_prefix, n_buckets=n_buckets)
 
 
 def compact_emb_pair_graph(
@@ -2320,15 +2281,6 @@ def compact_emb_pair_graph(
 
     t = lambda name: f"{table_prefix}_{name}"
     p = lambda name: os.path.join(store_dir, name)
-    # r13 ADVICE (medium): an async staging thread launched by a prior
-    # `async_reband=True` trigger writes the SAME gen+1 directory this
-    # sync pass may clear/commit. Join it first — a half-built staging
-    # is indistinguishable from a crashed-compaction orphan by path
-    # alone, and clearing it under a live appender can lose or
-    # duplicate segments in a committed generation. After the join the
-    # thread has either committed its marker (superseded below) or
-    # died (its orphan is cleared like any other).
-    _join_reband_thread(store_dir)
     meta = _read_graph_meta(store_dir) or {
         "n_tables": _EMB_TABLES,
         "n_bits": _EMB_BITS,
@@ -2351,21 +2303,10 @@ def compact_emb_pair_graph(
         )
         new_meta = {**meta, "n_unique": n_unique}
         _write_graph_meta(store_dir, new_meta)
-        # a completed-but-unfinalized staging is superseded by this
-        # pass's decision that the current width IS the target: clear
-        # its marker and directory so finalize never swaps in a
-        # generation compact adjudicated unnecessary
-        _clear_graph_staging(spark, store_dir, table_prefix, gen + 1)
         return new_meta
 
     new_gen = gen + 1
     new_table, new_path = _banded_loc(store_dir, table_prefix, new_gen)
-    # the marker points at the directory about to be cleared — remove
-    # it FIRST so no reader ever sees a marker for a half-rebuilt gen
-    try:
-        os.remove(os.path.join(store_dir, _GRAPH_STAGING))
-    except OSError:
-        pass
     if os.path.exists(new_path):
         # orphan of a crashed compaction (uncommitted by definition —
         # the meta still points at `gen`): clear it before rebuilding,
@@ -2412,436 +2353,6 @@ def compact_emb_pair_graph(
         spark.sql(f"DROP TABLE IF EXISTS {banded_table}_{seg}")
     shutil.rmtree(banded_path, ignore_errors=True)
     return new_meta
-
-
-_GRAPH_STAGING = "_STAGING.json"
-# process-local staging threads / failures, keyed by abspath(store):
-# visibility for the single writer; a second PROCESS staging the same
-# store is wasteful but safe (duplicate staged rows are absorbed by
-# the log's latest-wins read, and the meta swap is atomic either way)
-_REBAND_THREADS: dict = {}
-_REBAND_ERRORS: dict = {}
-
-
-def _read_graph_staging(store_dir: str) -> "dict | None":
-    import json
-
-    try:
-        with open(os.path.join(store_dir, _GRAPH_STAGING)) as fh:
-            return json.load(fh)
-    except (OSError, ValueError):
-        return None
-
-
-def _write_graph_staging(store_dir: str, staged: dict) -> None:
-    import json
-    import uuid
-
-    tmp = os.path.join(store_dir, f".{_GRAPH_STAGING}.{uuid.uuid4().hex}")
-    with open(tmp, "w") as fh:
-        json.dump(staged, fh)
-    os.replace(tmp, os.path.join(store_dir, _GRAPH_STAGING))
-
-
-def _join_reband_thread(store_dir: str) -> None:
-    """Wait out any in-flight async staging thread for this store
-    before a sync maintenance pass touches the gen+1 directory (r13
-    ADVICE medium — two writers on the same staging path). No-op when
-    called FROM the staging thread itself (joining self deadlocks)
-    or when no thread is registered/alive. A failure inside the
-    joined thread is left in ``_REBAND_ERRORS`` for the next
-    trigger's warning path — the caller only needs quiescence."""
-    import threading
-
-    key = os.path.abspath(store_dir)
-    th = _REBAND_THREADS.get(key)
-    if th is not None and th is not threading.current_thread() and th.is_alive():
-        th.join()
-
-
-def _clear_graph_staging(
-    spark: SparkSession, store_dir: str, table_prefix: str, staged_gen: int
-) -> None:
-    """Drop a superseded staging: its marker, registered segment
-    tables, and directory. Safe when nothing is staged."""
-    import shutil
-
-    from pulsar_spark_spark.sources.bucketed import _read_manifest
-
-    try:
-        os.remove(os.path.join(store_dir, _GRAPH_STAGING))
-    except OSError:
-        pass
-    staged_table, staged_path = _banded_loc(store_dir, table_prefix, staged_gen)
-    if os.path.exists(staged_path):
-        for seg in _read_manifest(staged_path):
-            spark.sql(f"DROP TABLE IF EXISTS {staged_table}_{seg}")
-        shutil.rmtree(staged_path, ignore_errors=True)
-
-
-def stage_emb_pair_graph_reband(
-    spark: SparkSession,
-    store_dir: str,
-    table_prefix: str = "emb_graph",
-    n_bits: "int | None" = None,
-    n_buckets: int = 16,
-) -> "dict | None":
-    """Phase 1 of the ASYNC re-band (round 13, r12 VERDICT missing
-    #4): build the next banded generation at the corpus-adaptive
-    width WITHOUT touching the serving meta — the store keeps serving
-    (and ingesting) from the old generation for the whole O(n_unique)
-    build, so no ingest call ever absorbs it as a stall. The build
-    still shares the machine with foreground work (r13 measured an
-    unisolated overlapped shard's ingest at ~1.9× its quiet wall);
-    when launched via the async trigger its jobs run in the capped
-    ``reband`` FAIR pool — declared by sessions built with
-    ``get_session(fair_pools=True)`` (round 15 scoped FAIR out of the
-    global session default; on a FIFO session the pool property is
-    ignored and staging runs unisolated, the pre-r14 behavior) —
-    weight 1 vs the default pool's
-    8, bounding the foreground penalty to ~1/9 of the task slots
-    under contention while keeping full width on an idle machine.
-    Measured controlled (tools/fair_pool_ab.py, interleaved rounds,
-    saturating fine-task hog): foreground ×1.47 under the capped
-    pool vs ×6.85 unisolated — within one pool scheduling is FIFO,
-    so an uncapped background job STARVES later foreground jobs,
-    which is also why the pool property is only set in pinned-thread
-    mode (shared local properties would leak the demotion onto the
-    foreground itself).
-
-    Snapshot semantics: bands every rep visible in the log NOW and
-    records the snapshot's high-water ``staged_max_version`` in a
-    ``_STAGING.json`` marker (atomic rename — the staging COMMIT
-    point). Shards ingested after the snapshot keep appending to the
-    OLD generation (still authoritative) and are caught up by
-    :func:`finalize_emb_pair_graph_reband`, whose cost is O(delta),
-    not O(corpus). A crash anywhere before the marker leaves an
-    orphan directory the next stage/compact clears; a crash after it
-    is recovered by finalize. Returns the marker dict, or None when
-    the store is already at the target width (nothing to stage)."""
-    import shutil
-
-    from pulsar_spark_spark.sources.bucketed import (
-        _read_manifest,
-        append_log_bucketed,
-        pin_log_segments,
-        read_log_bucketed,
-    )
-
-    t = lambda name: f"{table_prefix}_{name}"  # noqa: E731
-    p = lambda name: os.path.join(store_dir, name)  # noqa: E731
-    meta = _read_graph_meta(store_dir) or {
-        "n_tables": _EMB_TABLES,
-        "n_bits": _EMB_BITS,
-        "banded_gen": 0,
-        "n_unique": 0,
-    }
-    n_tables, cur_bits, gen = (
-        meta["n_tables"],
-        meta["n_bits"],
-        meta["banded_gen"],
-    )
-    # a direct (sync) stage call must not race a thread a prior
-    # async trigger left in flight on the same gen+1 path (no-op when
-    # called FROM that thread — the async arm's own worker runs here)
-    _join_reband_thread(store_dir)
-    # The reps scan's lazy plan stays bound to this manifest snapshot
-    # for the WHOLE O(n_unique) build below, while foreground ingest
-    # keeps committing shards — without the shared pin, a foreground
-    # reps-log compaction crossing its segment threshold would rmtree
-    # segments this staging job is still reading, failing the build
-    # only after the O(n_unique) work was spent (and under steady
-    # ingest the retry can hit the same race forever). While the pin
-    # is held the compactor skips (deferral is always safe); ordinary
-    # readers keep the documented retry contract.
-    with pin_log_segments(p("reps")):
-        return _stage_reband_pinned(
-            spark, store_dir, table_prefix, n_bits, n_buckets,
-            t, p, meta, n_tables, cur_bits, gen,
-        )
-
-
-def _stage_reband_pinned(
-    spark, store_dir, table_prefix, n_bits, n_buckets,
-    t, p, meta, n_tables, cur_bits, gen,
-):
-    """Body of :func:`stage_emb_pair_graph_reband`, run under the reps
-    log's shared segment pin (see the call site)."""
-    import shutil
-
-    from pulsar_spark_spark.sources.bucketed import (
-        _read_manifest,
-        append_log_bucketed,
-        read_log_bucketed,
-    )
-
-    reps = read_log_bucketed(spark, t("reps"), p("reps"), "vkey", "version")
-    row = reps.agg(
-        F.count(F.lit(1)).alias("n"), F.max("version").alias("v")
-    ).first()
-    n_unique, max_version = int(row["n"]), row["v"]
-    target = n_bits if n_bits is not None else auto_emb_bits(n_unique)
-    if target == cur_bits:
-        return None
-    new_gen = gen + 1
-    new_table, new_path = _banded_loc(store_dir, table_prefix, new_gen)
-    # r13 ADVICE: a COMPLETED, unfinalized staging at the same target
-    # (marker committed, swap pending) is the O(n_unique) artifact
-    # this call would otherwise rebuild — a retry / direct re-stage
-    # returns it for finalize instead of discarding it. Any OTHER
-    # marker (different gen or width) is stale and cleared below.
-    prior = _read_graph_staging(store_dir)
-    if (
-        prior is not None
-        and prior.get("staged_gen") == new_gen
-        and prior.get("target_bits") == target
-        and os.path.exists(new_path)
-    ):
-        return prior
-    # clear any stale marker BEFORE clearing its directory: a reader
-    # must never see a marker pointing at a half-rebuilt generation
-    try:
-        os.remove(os.path.join(store_dir, _GRAPH_STAGING))
-    except OSError:
-        pass
-    if os.path.exists(new_path):
-        # orphan of a crashed staging/compaction (uncommitted by
-        # definition — the meta still points at `gen`)
-        for seg in _read_manifest(new_path):
-            spark.sql(f"DROP TABLE IF EXISTS {new_table}_{seg}")
-        shutil.rmtree(new_path, ignore_errors=True)
-    n_spread = spark.sparkContext.defaultParallelism * 2
-    rebanded = (
-        reps.select("vkey", "embedding")
-        .repartition(n_spread, col("vkey"))
-        .select(
-            "vkey", F.explode(_emb_tables_expr(n_tables, target)).alias("tb")
-        )
-        .select(
-            "vkey",
-            col("tb.tbl").alias("tbl"),
-            col("tb.bucket").alias("bucket"),
-            F.lit(0).alias("version"),
-        )
-    )
-    # catalog=True: post-swap this IS the generation's dominant (often
-    # only) segment, read by every subsequent candidate join — and the
-    # DDL cost sits on the BACKGROUND staging path, not an ingest stall
-    append_log_bucketed(
-        rebanded,
-        new_table,
-        new_path,
-        ["vkey", "tbl"],
-        "version",
-        n_buckets,
-        auto_compact_segments=None,
-        catalog=True,
-    )
-    staged = {
-        "target_bits": target,
-        "staged_gen": new_gen,
-        "staged_max_version": max_version,
-        "staged_n_unique": n_unique,
-    }
-    _write_graph_staging(store_dir, staged)  # the staging commit point
-    return staged
-
-
-def finalize_emb_pair_graph_reband(
-    spark: SparkSession,
-    store_dir: str,
-    table_prefix: str = "emb_graph",
-    n_buckets: int = 16,
-) -> "dict | None":
-    """Phase 2 of the async re-band: catch up the staged generation
-    with every rep ingested AFTER the staging snapshot (an O(delta)
-    band — the latest-wins log absorbs re-banded rows a replay might
-    duplicate), then the atomic meta swap that makes the new
-    generation authoritative, then old-generation cleanup. This is
-    the ONLY re-band cost an ingest call ever absorbs under
-    ``async_reband=True`` — bounded by the shards since staging plus
-    the swap, never the corpus. Idempotent: re-running after a crash
-    at any point either redoes the bounded catch-up (pre-swap) or
-    finds a stale marker (post-swap — the sync compactor may also
-    have moved past it) and just clears it. Returns the committed
-    meta, or None when there is nothing to finalize."""
-    import shutil
-
-    from pulsar_spark_spark.sources.bucketed import (
-        _read_manifest,
-        append_log_bucketed,
-        read_log_bucketed,
-    )
-
-    t = lambda name: f"{table_prefix}_{name}"  # noqa: E731
-    p = lambda name: os.path.join(store_dir, name)  # noqa: E731
-    staged = _read_graph_staging(store_dir)
-    if staged is None:
-        return None
-    meta = _read_graph_meta(store_dir) or {
-        "n_tables": _EMB_TABLES,
-        "n_bits": _EMB_BITS,
-        "banded_gen": 0,
-        "n_unique": 0,
-    }
-    if (
-        staged["staged_gen"] != meta["banded_gen"] + 1
-        or staged["target_bits"] == meta["n_bits"]
-    ):
-        # stale marker: a sync compaction (or an earlier finalize)
-        # already moved the store past this staging
-        try:
-            os.remove(os.path.join(store_dir, _GRAPH_STAGING))
-        except OSError:
-            pass
-        return None
-    n_tables = meta["n_tables"]
-    target = staged["target_bits"]
-    new_gen = staged["staged_gen"]
-    new_table, new_path = _banded_loc(store_dir, table_prefix, new_gen)
-    old_table, old_path = _banded_loc(
-        store_dir, table_prefix, meta["banded_gen"]
-    )
-    reps = read_log_bucketed(spark, t("reps"), p("reps"), "vkey", "version")
-    max_v = staged["staged_max_version"]
-    # ONE job answers both "how many reps total" (the meta's exact
-    # n_unique) and "did anything land after the snapshot" (whether a
-    # catch-up band is needed) — the split limit(1).count + count pair
-    # was ~1.2 s of the measured finalize stall at fixture scale
-    stats = reps.agg(
-        F.count(F.lit(1)).alias("n_unique"),
-        (
-            F.count_if(col("version") > max_v)
-            if max_v is not None
-            else F.count(F.lit(1))
-        ).alias("n_delta"),
-    ).first()
-    if stats["n_delta"]:
-        delta = reps
-        if max_v is not None:
-            delta = reps.filter(col("version") > max_v)
-        n_spread = spark.sparkContext.defaultParallelism * 2
-        catch_up = (
-            delta.select("vkey", "embedding", "version")
-            .repartition(n_spread, col("vkey"))
-            .select(
-                "vkey",
-                F.explode(_emb_tables_expr(n_tables, target)).alias("tb"),
-                "version",
-            )
-            .select(
-                "vkey",
-                col("tb.tbl").alias("tbl"),
-                col("tb.bucket").alias("bucket"),
-                "version",
-            )
-        )
-        # default catalog=False: the catch-up is a transient L0
-        # segment next to the staged generation — per-segment DDL
-        # here was the dominant term of the absorbed stall
-        append_log_bucketed(
-            catch_up,
-            new_table,
-            new_path,
-            ["vkey", "tbl"],
-            "version",
-            n_buckets,
-            auto_compact_segments=None,
-        )
-    new_meta = {
-        "n_tables": n_tables,
-        "n_bits": target,
-        "banded_gen": new_gen,
-        "n_unique": int(stats["n_unique"]),
-    }
-    _write_graph_meta(store_dir, new_meta)  # the commit point
-    try:
-        os.remove(os.path.join(store_dir, _GRAPH_STAGING))
-    except OSError:
-        pass
-    for seg in _read_manifest(old_path):
-        spark.sql(f"DROP TABLE IF EXISTS {old_table}_{seg}")
-    shutil.rmtree(old_path, ignore_errors=True)
-    return new_meta
-
-
-def _advance_async_reband(
-    spark: SparkSession,
-    store_dir: str,
-    table_prefix: str,
-    n_buckets: int,
-) -> None:
-    """Async-re-band orchestration for :func:`update_emb_pair_graph`
-    (one call per over-width shard commit): finalize a completed
-    staging if one is waiting (the bounded catch-up + swap), else
-    launch staging in a daemon thread — Spark job submission is
-    thread-safe, and the staging writes only the NEXT generation plus
-    its marker, which the single-writer ingest never reads until the
-    marker exists. A failed staging surfaces as a warning on the next
-    trigger and is retried from scratch (its orphan directory is
-    cleared by the stage function)."""
-    import threading
-    import warnings
-
-    key = os.path.abspath(store_dir)
-    th = _REBAND_THREADS.get(key)
-    if th is not None and th.is_alive():
-        return  # staging in flight — keep serving at the standing debt
-    err = _REBAND_ERRORS.pop(key, None)
-    if err is not None:
-        warnings.warn(
-            f"async re-band of {store_dir} failed and will be retried: "
-            f"{type(err).__name__}: {err}",
-            stacklevel=3,
-        )
-    if _read_graph_staging(store_dir) is not None:
-        finalize_emb_pair_graph_reband(
-            spark, store_dir, table_prefix, n_buckets
-        )
-        return
-
-    def run() -> None:
-        try:
-            # Run the staging jobs in the capped `reband` FAIR pool
-            # (session.py declares it at weight 1 vs default 8): under
-            # pinned-thread mode the local property is scoped to THIS
-            # thread's jobs, so foreground ingest keeps ~8/9 of the
-            # task slots while staging overlaps (r13 measured the
-            # unisolated overlap at ~1.9× ingest slowdown) and an
-            # idle machine still gives staging full width. On a
-            # FIFO-scheduled session the property is ignored — the
-            # thread still only WRITES gen+1, so correctness never
-            # depends on the pool. Guarded on pinned-thread mode
-            # (Spark's default since 3.2): with PYSPARK_PIN_THREAD
-            # =false local properties are process-shared, so setting
-            # the pool here would DEMOTE foreground ingest into the
-            # weight-1 FIFO pool behind the staging jobs — the exact
-            # inversion the pool exists to prevent. Unpinned sessions
-            # just run unisolated, the pre-r14 behavior.
-            pinned = os.environ.get(
-                "PYSPARK_PIN_THREAD", "true"
-            ).lower() not in ("false", "0")
-            if pinned:
-                spark.sparkContext.setLocalProperty(
-                    "spark.scheduler.pool", "reband"
-                )
-            try:
-                stage_emb_pair_graph_reband(
-                    spark, store_dir, table_prefix, n_buckets=n_buckets
-                )
-            finally:
-                if pinned:
-                    spark.sparkContext.setLocalProperty(
-                        "spark.scheduler.pool", None
-                    )
-        except BaseException as e:  # noqa: BLE001 — surfaced next trigger
-            _REBAND_ERRORS[key] = e
-
-    worker = threading.Thread(
-        target=run, daemon=True, name=f"emb-reband-{os.path.basename(key)}"
-    )
-    _REBAND_THREADS[key] = worker
-    worker.start()
 
 
 def emb_graph_stats(

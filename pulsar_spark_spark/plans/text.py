@@ -2103,11 +2103,10 @@ def connected_components_star(
 _LOCAL_WALK_MAX_EDGES = 100_000
 
 
-def connected_components_local(
-    edges: DataFrame, a: str = "doc_a", b: str = "doc_b"
-) -> DataFrame:
-    """(node, component) by a driver-side union-find over a BOUNDED
-    edge relation — the small-graph arm of :func:`component_walk`.
+def _union_find_components(spark: SparkSession, rows) -> DataFrame:
+    """(node, component) by a driver-side union-find over collected
+    ``(x, y)`` edge rows — the small-graph arm of
+    :func:`component_walk`.
 
     Same contract as :func:`connected_components_min_label` (the walk
     the gate replaces): every node that appears in ANY edge — a
@@ -2121,10 +2120,6 @@ def connected_components_local(
     pipelines' existing broadcasts; above it the distributed walks
     are the right plan.
     """
-    spark = edges.sparkSession
-    rows = edges.select(
-        col(a).cast("long").alias("x"), col(b).cast("long").alias("y")
-    ).collect()
     parent: dict[int, int] = {}
 
     def find(u: int) -> int:
@@ -2158,12 +2153,13 @@ def component_walk(
 
     ``"min_label"`` and ``"star"`` force that algorithm. ``"auto"``
     (the production default for the registered cluster queries) first
-    gates on edge count (one cheap job over the callers' checkpointed
-    edge relation): a graph under ``_LOCAL_WALK_MAX_EDGES`` resolves
-    by driver-local union-find (:func:`connected_components_local`) —
-    round 15, interleaved A/B: the sf0.1 embedding rep graph took 4
-    distributed min-label rounds (~1.9 s of per-round fixed overhead)
-    for a few hundred edges the driver folds in milliseconds. Above
+    collects at most ``_LOCAL_WALK_MAX_EDGES + 1`` edges in one bounded
+    job, and a graph within the bound resolves from those same rows by
+    driver-local union-find (:func:`_union_find_components`), so an
+    unmaterialized edge lineage runs once — round 15, interleaved
+    A/B: the sf0.1 embedding rep graph took 4 distributed min-label
+    rounds (~1.9 s of per-round fixed overhead) for a few hundred
+    edges the driver folds in milliseconds. Above
     the bound it probes the min-label fast path — fewest rounds on
     shallow pair/triangle graphs — under a deliberately SMALL budget,
     and on :class:`CCBudgetExceeded` (component diameter beyond the
@@ -2179,8 +2175,13 @@ def component_walk(
         return connected_components_star(edges, a, b)
     if cc != "auto":
         raise ValueError(f"cc must be min_label/star/auto, got {cc!r}")
-    if edges.count() <= _LOCAL_WALK_MAX_EDGES:
-        return connected_components_local(edges, a, b)
+    rows = (
+        edges.select(col(a).cast("long").alias("x"), col(b).cast("long").alias("y"))
+        .limit(_LOCAL_WALK_MAX_EDGES + 1)
+        .collect()
+    )
+    if len(rows) <= _LOCAL_WALK_MAX_EDGES:
+        return _union_find_components(edges.sparkSession, rows)
     try:
         return connected_components_min_label(edges, a, b, max_iter=8)
     except CCBudgetExceeded:

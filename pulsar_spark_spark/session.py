@@ -90,77 +90,6 @@ def arrow_stage_width(spark: "SparkSession") -> int:
     return par * 2
 
 
-# Background-maintenance isolation (round 14, r13 VERDICT wrong #2):
-# the async pair-graph re-band stages the O(n_unique) rebuild on a
-# daemon thread, and under FIFO scheduling its jobs time-slice
-# EQUALLY with foreground ingest (measured: the overlapped shard's
-# ingest ran 90.2 s vs ~47 s quiet). Sessions that run that staging
-# thread use the FAIR scheduler with two declared pools — `default`
-# (weight 8) for foreground work and `reband` (weight 1) for
-# background staging — so under contention the foreground keeps
-# ~8/9 of the task slots while an idle machine still gives staging
-# full width (fair sharing is work-conserving; a weight is a
-# contention ratio, not a hard reservation).
-#
-# SCOPED, not global (round 15, r14 VERDICT wrong #1): round 14 made
-# FAIR the default for EVERY session, including batch/streaming
-# benches that never start a second pool. An interleaved fresh-JVM
-# FIFO-vs-FAIR A/B over all six streaming bench rows
-# (stream_sched_ab.json: best-of-3 ratios 0.87-1.13, no systematic
-# direction) shows FAIR costs nothing measurable uncontended — the
-# r14 streaming drop was host drift, not the scheduler — but a
-# global scheduler mode for one background feature is wrong scoping:
-# ordinary sessions now keep Spark's FIFO default and callers that
-# launch the async re-band opt in via ``get_session(fair_pools=True)``.
-_POOLS_XML = """<?xml version="1.0"?>
-<allocations>
-  <pool name="default">
-    <schedulingMode>FIFO</schedulingMode>
-    <weight>8</weight>
-    <minShare>0</minShare>
-  </pool>
-  <pool name="reband">
-    <schedulingMode>FIFO</schedulingMode>
-    <weight>1</weight>
-    <minShare>0</minShare>
-  </pool>
-</allocations>
-"""
-
-
-def _fair_pools_file() -> str:
-    """Materialize the pool declarations where the scheduler can read
-    them (atomic rename — concurrent sessions may race the write).
-    The filename carries the uid: /tmp's sticky bit forbids
-    rename-over of another user's file, so a world-shared name would
-    make get_session crash for the second user on a shared host."""
-    import tempfile
-
-    uid = getattr(os, "getuid", lambda: "u")()
-    path = os.path.join(
-        tempfile.gettempdir(), f"pulsar_spark_spark_pools_{uid}.xml"
-    )
-    tmp = f"{path}.{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write(_POOLS_XML)
-    os.replace(tmp, path)
-    return path
-
-
-def scheduler_conf(fair_pools: bool) -> dict[str, str]:
-    """Session scheduler configs for ``get_session(fair_pools=...)``:
-    empty (Spark's FIFO default) for ordinary sessions; the FAIR mode
-    + declared-pools allocation file only for sessions that will run
-    background maintenance (the async pair-graph re-band pins its
-    staging jobs to the capped ``reband`` pool — see _POOLS_XML)."""
-    if not fair_pools:
-        return {}
-    return {
-        "spark.scheduler.mode": "FAIR",
-        "spark.scheduler.allocation.file": _fair_pools_file(),
-    }
-
-
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state."
     "RocksDBStateStoreProvider"
@@ -232,15 +161,8 @@ def get_session(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    fair_pools: bool = False,
 ) -> SparkSession:
-    """Create (or fetch) the engine SparkSession.
-
-    ``fair_pools=True`` runs the FAIR scheduler with the declared
-    ``default``/``reband`` pools — required only when the session will
-    launch background maintenance (``update_emb_pair_graph`` with
-    ``async_reband=True``); everything else keeps FIFO (see
-    :func:`scheduler_conf`)."""
+    """Create (or fetch) the engine SparkSession."""
     cores = _local_cores()
     master = master or f"local[{cores}]"
     builder = (
@@ -274,10 +196,6 @@ def get_session(
         # (round-12 VERDICT wrong #3).
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
     )
-    # FAIR scheduler + capped `reband` pool ONLY for sessions that run
-    # background maintenance threads (see the _POOLS_XML note above)
-    for k, v in scheduler_conf(fair_pools).items():
-        builder = builder.config(k, v)
     # Streaming state-store provider. The default HDFS-backed store
     # keeps every key's state on-heap and rewrites the full map per
     # batch — measured fine through 100× state cardinality

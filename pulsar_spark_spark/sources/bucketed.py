@@ -563,40 +563,6 @@ def _merge_segments(
 _ORPHAN_GRACE_SEC = 3600.0
 
 
-@contextlib.contextmanager
-def pin_log_segments(path_base: str):
-    """SHARED lock on the log's ``.compact.lock`` for the duration of
-    a long-running read: while any pinning reader holds it,
-    :func:`compact_log`'s exclusive non-blocking acquire fails and
-    the compactor SKIPS (compaction is a read optimization — deferral
-    is always safe), so the reader's lazily-bound segment paths
-    cannot be rmtree'd out from under it. Exists for reads whose
-    retry cost is large (the async re-band's O(n_unique) staging
-    scan); ordinary :func:`read_log_bucketed` consumers keep the
-    documented retry-resolves reader/compactor contract instead —
-    pinning every read would starve compaction. flock applies
-    between file descriptions, so the exclusion also works between a
-    staging thread and a compacting foreground thread of the SAME
-    process. No-op on platforms without fcntl."""
-    import os
-
-    try:
-        import fcntl
-    except ImportError:
-        yield
-        return
-    os.makedirs(path_base, exist_ok=True)
-    fd = os.open(
-        os.path.join(path_base, ".compact.lock"), os.O_CREAT | os.O_RDWR
-    )
-    try:
-        fcntl.flock(fd, fcntl.LOCK_SH)
-        yield
-    finally:
-        fcntl.flock(fd, fcntl.LOCK_UN)
-        os.close(fd)
-
-
 def compact_log(
     spark: SparkSession,
     table_base: str,

@@ -366,6 +366,7 @@ def run_geotag_rescore_stream(
         return flip
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        from pulsar_spark_spark.operators.checkpoint import materialize
         from pulsar_spark_spark.operators.grouped import _finite_points
 
         spark = batch_df.sparkSession
@@ -379,10 +380,16 @@ def run_geotag_rescore_stream(
         # here keeps history and scoring in agreement; an all-invalid
         # batch simply carries no location information and leaves the
         # stored state untouched.
-        new_pts = _finite_points(
-            batch_df.select(
-                "user_id", "event_id", "ts_ms", "lat", "lng", "accuracy"
-            )
+        # evaluated ONCE per trigger: the batch feeds both the state
+        # semi-join keys and the history union, and a second scan of
+        # the source would also double the trigger's numInputRows
+        new_pts = materialize(
+            _finite_points(
+                batch_df.select(
+                    "user_id", "event_id", "ts_ms", "lat", "lng", "accuracy"
+                )
+            ),
+            eager=True,
         )
         try:
             state = (

@@ -741,6 +741,59 @@ def test_geotag_bucketed_arm_parity_and_state_no_exchange(
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
+def test_geotag_arms_drop_null_event_type(spark, tmp_path, monkeypatch):
+    """A NULL ``event_type`` row belongs to neither union input (state
+    is != 'purchase', batch is == 'purchase'), so the plain arm, the
+    bucketed arm and the DuckDB oracle all leave it out of
+    geotag_history_merge."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from pulsar_spark_spark.plans import ORACLES, QUERIES
+    from pulsar_spark_spark.plans.geo import ensure_geotag_state_layout
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    ev = pq.read_table("/root/testdata/sf0.001/events.parquet")
+    null_rows = pa.array([i % 7 == 0 for i in range(ev.num_rows)])
+    ev = ev.set_column(
+        ev.schema.get_field_index("event_type"),
+        "event_type",
+        pc.if_else(null_rows, pa.scalar(None, pa.string()), ev["event_type"]),
+    )
+    pq.write_table(ev, sf / "events.parquet")
+    null_ids = set(pc.filter(ev["event_id"], null_rows).to_pylist())
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_ROOT", str(tmp_path / "idx"))
+
+    def rows(arm):
+        monkeypatch.setenv("SPARK_GRAFT_GEOTAG_ARM", arm)
+        return sorted(
+            (r["user_id"], r["event_id"], round(r["lat"], 9),
+             round(r["lng"], 9), r["accuracy"])
+            for r in QUERIES["geotag_history_merge"](spark, str(sf)).collect()
+        )
+
+    table = ensure_geotag_state_layout(spark, str(sf))
+    try:
+        plain, bucketed = rows("plain"), rows("bucketed")
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf / 'events.parquet'}'")
+    oracle = sorted(
+        (r[0], r[1], round(r[2], 9), round(r[3], 9), r[4])
+        for r in con.execute(
+            "SELECT user_id, event_id, lat, lng, accuracy FROM ("
+            + ORACLES["geotag_history_merge"]
+            + ")"
+        ).fetchall()
+    )
+    assert plain and not null_ids & {r[1] for r in plain}
+    assert plain == bucketed == oracle
+
+
 def test_geotag_arm_routing(spark, monkeypatch):
     """'auto' keeps every gate/bench corpus on the committed plain
     plan; an unknown arm raises."""

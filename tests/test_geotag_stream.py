@@ -325,3 +325,24 @@ def test_rescore_drops_non_finite_points(spark, tmp_path):
     assert got[1]["n_points"] == want[1][2]  # NaN point not counted
     hist_eids = [h["event_id"] for h in got[1]["history"]]
     assert 190 not in hist_eids  # ...and not accumulated in history
+
+
+def test_rescore_reads_each_batch_once(spark, tmp_path):
+    """Each trigger scans its micro-batch once: ``numInputRows`` equals
+    the arrival file's row count on every trigger, including those
+    that merge against stored state (the state semi-join keys and the
+    history union share one evaluation of the batch)."""
+    src = str(tmp_path / "src")
+    os.makedirs(src, exist_ok=True)
+    chunks = _chunks()
+    for i, c in enumerate(chunks):
+        _write_chunk(spark, c, src, f"c{i}")
+    stream = spark.readStream.schema(SCHEMA).option(
+        "maxFilesPerTrigger", "1"
+    ).parquet(src)
+    q = run_geotag_rescore_stream(
+        stream, str(tmp_path / "state"), str(tmp_path / "ckpt"), history_cap=CAP
+    )
+    assert q.awaitTermination(120)
+    per_batch = {p["batchId"]: p["numInputRows"] for p in q.recentProgress}
+    assert [per_batch[b] for b in sorted(per_batch)] == [len(c) for c in chunks]

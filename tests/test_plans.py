@@ -263,39 +263,6 @@ def test_no_plan_module_mutates_session_conf():
     assert not offenders, offenders
 
 
-def test_fair_pools_scoped_to_optin_sessions(spark):
-    """Round 15 (r14 VERDICT wrong #1): the FAIR scheduler + capped
-    `reband` pool exist only for sessions that launch the async
-    pair-graph staging thread (``get_session(fair_pools=True)``);
-    ordinary sessions keep Spark's FIFO default — the r14 global FAIR
-    default was wrong scoping (stream_sched_ab.json measured it
-    cost-neutral uncontended, but a batch bench has no business under
-    a maintenance scheduler mode)."""
-    import os
-
-    from pulsar_spark_spark.session import scheduler_conf
-
-    # ordinary sessions: no scheduler override at all
-    assert scheduler_conf(False) == {}
-    assert spark.conf.get("spark.scheduler.mode", "FIFO") == "FIFO"
-    # opt-in sessions: FAIR + the declared weight-8/weight-1 pools
-    conf = scheduler_conf(True)
-    assert conf["spark.scheduler.mode"] == "FAIR"
-    alloc = conf["spark.scheduler.allocation.file"]
-    assert alloc and os.path.exists(alloc)
-    with open(alloc) as fh:
-        xml = fh.read()
-    assert '<pool name="reband">' in xml
-    assert '<pool name="default">' in xml
-    # the staging worker pins its jobs to the capped pool
-    import inspect
-
-    import pulsar_spark_spark.plans.similarity as S
-
-    src = inspect.getsource(S._advance_async_reband)
-    assert '"spark.scheduler.pool", "reband"' in src
-
-
 def test_select_state_store_auto_rule(spark, monkeypatch):
     """Round 14 (r13 VERDICT missing #4): the state-store provider
     auto-selects from estimated per-box state cardinality at the

@@ -1070,87 +1070,6 @@ def test_registered_emb_queries_stay_exact_bucket_at_gate_width(spark):
     assert auto == exact and len(auto) > 0
 
 
-def test_emb_pair_graph_compact_debt_defers_reband(spark, tmp_path):
-    """Round 12 (VERDICT wrong #4): compact_debt_bits defers the
-    auto re-band past the width boundary — the first boundary shard
-    ingests WITHOUT the O(n_unique) stall (generation unchanged),
-    occupancy drifts (recall can only rise: the stored width is
-    narrower than adaptive), and once the debt is exceeded ONE
-    compaction jumps straight to the adaptive width. Serving stays
-    correct throughout: a planted near-dup joins its cluster both
-    while the debt is standing and after the deferred re-band."""
-    import numpy as np
-    import pandas as pd
-
-    import pulsar_spark_spark.plans.similarity as S
-
-    rng = np.random.default_rng(1212)
-    dim = 64
-
-    def make_df(ids, rows):
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {"vec_id": ids, "embedding": [list(map(float, v)) for v in rows]}
-            ),
-            "vec_id long, embedding array<float>",
-        )
-
-    store = str(tmp_path / "graph12")
-    prefix = "t_emb_debt"
-    vecs = rng.standard_normal((9000, dim)).astype("float32")
-    base = rng.standard_normal(dim).astype("float32") * 10
-    vecs[7] = base
-
-    try:
-        S.update_emb_pair_graph(
-            make_df(list(range(9000)), vecs), store, version=0,
-            table_prefix=prefix, auto_compact=False,
-        )
-        assert S._read_graph_meta(store)["banded_gen"] == 0
-
-        # boundary shard (9005 uniques -> adaptive 9 bits > pinned 8):
-        # with debt=1 the stall is DEFERRED — no re-band
-        extra = rng.standard_normal((5, dim)).astype("float32")
-        S.update_emb_pair_graph(
-            make_df(list(range(9000, 9005)), extra), store, version=1,
-            table_prefix=prefix, compact_debt_bits=1,
-        )
-        meta = S._read_graph_meta(store)
-        assert (meta["n_bits"], meta["banded_gen"]) == (8, 0), meta
-        # debt standing: serving still correct (occupancy drift only)
-        joiner = base + 0.03 * np.eye(dim, dtype="float32")[0]
-        S.update_emb_pair_graph(
-            make_df([9100], joiner[None, :]), store, version=2,
-            table_prefix=prefix, compact_debt_bits=1,
-        )
-        comp = {
-            r["node"]: r["component"]
-            for r in S.read_emb_components(spark, store, prefix).collect()
-        }
-        assert comp[9100] == comp[7]
-
-        # push past the debt (adaptive 10 bits > 8 + 1): ONE deferred
-        # compaction jumps straight to the adaptive width
-        many = rng.standard_normal((8000, dim)).astype("float32")
-        S.update_emb_pair_graph(
-            make_df(list(range(10000, 18000)), many), store, version=3,
-            table_prefix=prefix, compact_debt_bits=1,
-        )
-        meta = S._read_graph_meta(store)
-        assert meta["banded_gen"] == 1, meta
-        assert meta["n_bits"] == S.auto_emb_bits(meta["n_unique"]), meta
-        # post-reband serving: the planted pair survives the jump
-        comp = {
-            r["node"]: r["component"]
-            for r in S.read_emb_components(spark, store, prefix).collect()
-        }
-        assert comp[9100] == comp[7]
-    finally:
-        for t in [r["tableName"] for r in spark.sql("SHOW TABLES").collect()]:
-            if t.startswith(prefix):
-                spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
 def test_emb_collapse_rate_and_shared_stats_scan(spark):
     """Round 13: emb_collapse_rate reads the same memoized single-scan
     stats as the adaptive width — ~0 on the all-distinct fixture, ~0.9
@@ -1180,280 +1099,6 @@ def test_emb_collapse_rate_and_shared_stats_scan(spark):
     )
     rate = emb_collapse_rate(dup)
     assert 0.85 <= rate <= 0.95, rate  # 200 rows, 20 uniques
-
-
-def test_emb_pair_graph_async_reband_stages_then_swaps(spark, tmp_path):
-    """Round 13 (r12 VERDICT missing #4): async_reband replaces the
-    synchronous boundary stall with (a) staging the new banded
-    generation on a background thread while the old one keeps serving
-    and ingesting, then (b) an O(delta) catch-up + atomic meta swap on
-    a later trigger. The finished store's banded relation is
-    SET-IDENTICAL to a sync-compacted twin fed the same shards."""
-    import numpy as np
-    import pandas as pd
-
-    import pulsar_spark_spark.plans.similarity as S
-
-    rng = np.random.default_rng(1313)
-    dim = 64
-
-    def make_df(ids, rows):
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {"vec_id": ids, "embedding": [list(map(float, v)) for v in rows]}
-            ),
-            "vec_id long, embedding array<float>",
-        )
-
-    vecs = rng.standard_normal((9000, dim)).astype("float32")
-    s1 = rng.standard_normal((5, dim)).astype("float32")
-    s2 = rng.standard_normal((5, dim)).astype("float32")
-    shards = [
-        (list(range(9000)), vecs),
-        (list(range(9000, 9005)), s1),
-        (list(range(9100, 9105)), s2),
-    ]
-    stores = {
-        "async": (str(tmp_path / "ga"), "t_emb_async"),
-        "sync": (str(tmp_path / "gs"), "t_emb_syncref"),
-    }
-    try:
-        for arm, (store, prefix) in stores.items():
-            is_async = arm == "async"
-            # shard 0: below-boundary seed (no compaction either arm)
-            S.update_emb_pair_graph(
-                make_df(*shards[0]), store, version=0,
-                table_prefix=prefix, auto_compact=False,
-            )
-            # shard 1 crosses the width boundary (9005 uniques ->
-            # adaptive 9 > pinned 8)
-            S.update_emb_pair_graph(
-                make_df(*shards[1]), store, version=1,
-                table_prefix=prefix, async_reband=is_async,
-            )
-            meta = S._read_graph_meta(store)
-            if is_async:
-                # staging ran on a thread; the serving meta is untouched
-                th = S._REBAND_THREADS[__import__("os").path.abspath(store)]
-                th.join(300)
-                assert not th.is_alive()
-                assert (meta["n_bits"], meta["banded_gen"]) == (8, 0), meta
-                staged = S._read_graph_staging(store)
-                assert staged and staged["target_bits"] == 9, staged
-            else:
-                assert (meta["n_bits"], meta["banded_gen"]) == (9, 1), meta
-            # shard 2: for the async arm this trigger FINALIZES —
-            # shard 2's reps are exactly the catch-up delta
-            S.update_emb_pair_graph(
-                make_df(*shards[2]), store, version=2,
-                table_prefix=prefix, async_reband=is_async,
-            )
-        import os
-
-        from pulsar_spark_spark.sources.bucketed import read_log_bucketed
-
-        banded = {}
-        for arm, (store, prefix) in stores.items():
-            meta = S._read_graph_meta(store)
-            assert (meta["n_bits"], meta["banded_gen"]) == (9, 1), (arm, meta)
-            if arm == "async":
-                assert S._read_graph_staging(store) is None  # marker gone
-                old_t, old_p = S._banded_loc(store, prefix, 0)
-                assert not os.path.exists(old_p)  # old gen cleaned up
-            tbl, path = S._banded_loc(store, prefix, 1)
-            banded[arm] = {
-                (r["vkey"], r["tbl"], r["bucket"])
-                for r in read_log_bucketed(
-                    spark, tbl, path, ["vkey", "tbl"], "version"
-                ).collect()
-            }
-        assert banded["async"] == banded["sync"] and banded["async"]
-    finally:
-        for t in [r["tableName"] for r in spark.sql("SHOW TABLES").collect()]:
-            if t.startswith("t_emb_async") or t.startswith("t_emb_syncref"):
-                spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_emb_pair_graph_async_reband_crash_safety(spark, tmp_path):
-    """Crash contract of the staged re-band: (a) a crash BEFORE the
-    staging marker leaves an orphan generation a re-stage clears and
-    rebuilds; (b) a crash AFTER the marker but before finalize is
-    recovered by finalize alone (meta swap + cleanup); (c) finalize
-    with no / stale marker is a no-op returning None."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    import pulsar_spark_spark.plans.similarity as S
-
-    rng = np.random.default_rng(1414)
-    dim = 8
-    store, prefix = str(tmp_path / "gc"), "t_emb_crash"
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "vec_id": list(range(120)),
-                "embedding": [
-                    list(map(float, v))
-                    for v in rng.standard_normal((120, dim)).astype("float32")
-                ],
-            }
-        ),
-        "vec_id long, embedding array<float>",
-    )
-    try:
-        # pinned 2-bit store: 120 uniques outgrow it immediately
-        S.update_emb_pair_graph(
-            df, store, version=0, table_prefix=prefix,
-            n_bits=2, auto_compact=False,
-        )
-        # (c) nothing staged yet
-        assert S.finalize_emb_pair_graph_reband(spark, store, prefix) is None
-        # (a) stage, then simulate a crash BEFORE the marker landed
-        staged = S.stage_emb_pair_graph_reband(spark, store, prefix)
-        assert staged is not None
-        os.remove(os.path.join(store, S._GRAPH_STAGING))
-        restaged = S.stage_emb_pair_graph_reband(spark, store, prefix)
-        assert restaged is not None  # orphan cleared, staged again
-        # (b) crash after the marker: a bare finalize recovers
-        meta = S.finalize_emb_pair_graph_reband(spark, store, prefix)
-        assert meta is not None
-        assert meta["n_bits"] == S.auto_emb_bits(120)
-        assert meta["banded_gen"] == 1
-        assert S._read_graph_staging(store) is None
-        # (c) idempotence: a second finalize finds nothing to do
-        assert S.finalize_emb_pair_graph_reband(spark, store, prefix) is None
-        # serving still works post-swap
-        assert S.read_emb_components(spark, store, prefix).count() >= 0
-    finally:
-        for t in [r["tableName"] for r in spark.sql("SHOW TABLES").collect()]:
-            if t.startswith(prefix):
-                spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def _mk_emb_df(spark, n, dim, seed):
-    import numpy as np
-    import pandas as pd
-
-    rng = np.random.default_rng(seed)
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "vec_id": list(range(n)),
-                "embedding": [
-                    list(map(float, v))
-                    for v in rng.standard_normal((n, dim)).astype("float32")
-                ],
-            }
-        ),
-        "vec_id long, embedding array<float>",
-    )
-
-
-def test_stage_reuses_completed_unfinalized_staging(spark, tmp_path):
-    """Round 14 (r13 ADVICE): a direct re-stage (or the retry path)
-    that finds a COMPLETED, unfinalized staging at the same target
-    returns it for finalize instead of discarding the whole
-    O(n_unique) build and rebuilding from scratch."""
-    import pulsar_spark_spark.plans.similarity as S
-    from pulsar_spark_spark.sources.bucketed import _read_manifest
-
-    store, prefix = str(tmp_path / "gr"), "t_emb_reuse"
-    df = _mk_emb_df(spark, 120, 8, 1515)
-    try:
-        S.update_emb_pair_graph(
-            df, store, version=0, table_prefix=prefix,
-            n_bits=2, auto_compact=False,
-        )
-        staged = S.stage_emb_pair_graph_reband(spark, store, prefix)
-        assert staged is not None
-        _, staged_path = S._banded_loc(store, prefix, staged["staged_gen"])
-        segs_before = _read_manifest(staged_path)
-        assert segs_before
-        restaged = S.stage_emb_pair_graph_reband(spark, store, prefix)
-        # same marker handed back, staged segments untouched (no rebuild)
-        assert restaged == staged
-        assert _read_manifest(staged_path) == segs_before
-        meta = S.finalize_emb_pair_graph_reband(spark, store, prefix)
-        assert meta is not None and meta["n_bits"] == staged["target_bits"]
-    finally:
-        for t in [r["tableName"] for r in spark.sql("SHOW TABLES").collect()]:
-            if t.startswith(prefix):
-                spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_compact_joins_inflight_async_staging(spark, tmp_path):
-    """Round 14 (r13 ADVICE medium): a sync compact called while an
-    async staging thread is in flight on the same store must WAIT for
-    it (two writers on the gen+1 path can lose or duplicate committed
-    segments), then supersede its marker."""
-    import os
-    import threading
-    import time
-
-    import pulsar_spark_spark.plans.similarity as S
-
-    store, prefix = str(tmp_path / "gj"), "t_emb_join"
-    df = _mk_emb_df(spark, 120, 8, 1616)
-    try:
-        S.update_emb_pair_graph(
-            df, store, version=0, table_prefix=prefix,
-            n_bits=2, auto_compact=False,
-        )
-        # a stand-in staging thread that holds the store until released
-        gate = threading.Event()
-        fake = threading.Thread(target=gate.wait, daemon=True)
-        fake.start()
-        S._REBAND_THREADS[os.path.abspath(store)] = fake
-
-        done = threading.Event()
-        result = {}
-
-        def run_compact():
-            result["meta"] = S.compact_emb_pair_graph(spark, store, prefix)
-            done.set()
-
-        worker = threading.Thread(target=run_compact, daemon=True)
-        worker.start()
-        # compact must be blocked on the join, not clearing gen+1
-        assert not done.wait(1.0)
-        gate.set()
-        assert done.wait(120), "compact never completed after join"
-        assert result["meta"]["n_bits"] == S.auto_emb_bits(120)
-        # any staging marker is superseded by the sync pass
-        assert S._read_graph_staging(store) is None
-    finally:
-        S._REBAND_THREADS.pop(os.path.abspath(store), None)
-        for t in [r["tableName"] for r in spark.sql("SHOW TABLES").collect()]:
-            if t.startswith(prefix):
-                spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_compact_supersedes_completed_staging(spark, tmp_path):
-    """A completed-but-unfinalized staging is superseded by a sync
-    compact: the compact commits the re-band itself and clears the
-    marker, and a later finalize is a clean no-op (never swaps in a
-    generation the compactor moved past)."""
-    import pulsar_spark_spark.plans.similarity as S
-
-    store, prefix = str(tmp_path / "gsup"), "t_emb_sup"
-    df = _mk_emb_df(spark, 120, 8, 1717)
-    try:
-        S.update_emb_pair_graph(
-            df, store, version=0, table_prefix=prefix,
-            n_bits=2, auto_compact=False,
-        )
-        assert S.stage_emb_pair_graph_reband(spark, store, prefix) is not None
-        meta = S.compact_emb_pair_graph(spark, store, prefix)
-        assert meta["n_bits"] == S.auto_emb_bits(120)
-        assert S._read_graph_staging(store) is None
-        assert S.finalize_emb_pair_graph_reband(spark, store, prefix) is None
-        assert S.read_emb_components(spark, store, prefix).count() >= 0
-    finally:
-        for t in [r["tableName"] for r in spark.sql("SHOW TABLES").collect()]:
-            if t.startswith(prefix):
-                spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_collapse_rate_boundary_escalates_to_exact(spark, monkeypatch):

@@ -647,6 +647,33 @@ def test_component_walk_auto_local_arm_matches_distributed(spark):
     assert local == dist and local
 
 
+def test_component_walk_auto_gate_evaluates_edges_once(spark):
+    """The auto gate and the driver-local walk share ONE evaluation of
+    an unmaterialized edge lineage: a counting UDF in the edge
+    relation's filter sees each edge row exactly once."""
+    import pyspark.sql.functions as F
+    from pyspark.sql.functions import col
+    from pyspark.sql.types import BooleanType
+
+    from pulsar_spark_spark.plans.text import component_walk
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def keep(_v):
+        seen.add(1)
+        return True
+
+    n = 200
+    edges = (
+        spark.range(n, numPartitions=4)
+        .filter(F.udf(keep, BooleanType())(col("id")))
+        .select(col("id").alias("doc_a"), ((col("id") + 1) % 50).alias("doc_b"))
+    )
+    labels = component_walk(edges).collect()
+    assert labels
+    assert seen.value == n
+
+
 def test_hot_bucket_stats_reports_what_cap_drops(spark):
     """The observability twin must surface exactly the over-cap
     buckets (the all-bands-hot recall trade is visible, not silent)."""

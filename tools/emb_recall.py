@@ -287,8 +287,6 @@ def _truth_pair_set(sf_dir: str, thresh: float):
 def compaction_recall(
     shard_size: int = 30_000,
     multiprobe: bool = False,
-    compact_debt_bits: int = 0,
-    async_reband: bool = False,
 ) -> dict:
     """Round 11 (VERDICT missing #2 / wrong #3): ingest the 100x
     corpus (200k vectors) through the pair-graph store in vec_id-order
@@ -376,11 +374,7 @@ def compaction_recall(
     # update_emb_pair_graph resolves compact_emb_pair_graph through
     # the module namespace, so a module-level wrap sees the auto call
     orig_compact = S.compact_emb_pair_graph
-    orig_stage = S.stage_emb_pair_graph_reband
-    orig_finalize = S.finalize_emb_pair_graph_reband
     last_compact = {"sec": None}
-    last_stage = {"sec": None}      # background-thread wall (not a stall)
-    last_finalize = {"sec": None}   # the only stall the async arm absorbs
 
     def timed_compact(*a, **k):
         t0 = time.time()
@@ -388,22 +382,7 @@ def compaction_recall(
         last_compact["sec"] = round(time.time() - t0, 1)
         return out
 
-    def timed_stage(*a, **k):
-        t0 = time.time()
-        out = orig_stage(*a, **k)
-        last_stage["sec"] = round(time.time() - t0, 1)
-        return out
-
-    def timed_finalize(*a, **k):
-        t0 = time.time()
-        out = orig_finalize(*a, **k)
-        if out is not None:
-            last_finalize["sec"] = round(time.time() - t0, 1)
-        return out
-
     S.compact_emb_pair_graph = timed_compact
-    S.stage_emb_pair_graph_reband = timed_stage
-    S.finalize_emb_pair_graph_reband = timed_finalize
     try:
         shards = [
             ("organic", lo, min(lo + shard_size, n_total))
@@ -424,17 +403,8 @@ def compaction_recall(
                     "vec_id long, embedding array<double>",
                 )
             last_compact["sec"] = None
-            last_stage["sec"] = None
-            last_finalize["sec"] = None
             t0 = time.time()
-            S.update_emb_pair_graph(
-                batch,
-                store,
-                version=k,
-                multiprobe=multiprobe,
-                compact_debt_bits=compact_debt_bits,
-                async_reband=async_reband,
-            )
+            S.update_emb_pair_graph(batch, store, version=k, multiprobe=multiprobe)
             ingest_sec = round(time.time() - t0, 1)
             meta = S._read_graph_meta(store)
             stored = {
@@ -457,8 +427,6 @@ def compaction_recall(
                     "rebanded_this_shard": meta["banded_gen"] != prev_gen,
                     "ingest_sec": ingest_sec,
                     "compact_sec": last_compact["sec"],
-                    "stage_sec_bg": last_stage["sec"],
-                    "finalize_sec": last_finalize["sec"],
                     "truth_ge_0.9": len(t_pref),
                     "stored_ge_0.9": len(stored),
                     "recall_ge_0.9": (
@@ -474,28 +442,15 @@ def compaction_recall(
             )
             prev_gen = meta["banded_gen"]
             print(json.dumps(rows[-1]), flush=True)
-        if async_reband:
-            # drain a trailing background staging, then a bare
-            # finalize so the artifact's final meta is the swapped one
-            th = S._REBAND_THREADS.get(os.path.abspath(store))
-            if th is not None:
-                th.join(600)
-            S.finalize_emb_pair_graph_reband(spark, store)
     finally:
         S.compact_emb_pair_graph = orig_compact
-        S.stage_emb_pair_graph_reband = orig_stage
-        S.finalize_emb_pair_graph_reband = orig_finalize
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)
-    stalls = [r["compact_sec"] for r in rows if r["compact_sec"]] + [
-        r["finalize_sec"] for r in rows if r.get("finalize_sec")
-    ]
+    stalls = [r["compact_sec"] for r in rows if r["compact_sec"]]
     quiet = [r["ingest_sec"] for r in rows if not r["rebanded_this_shard"]]
     return {
         "corpus": "sf10 (100x, 200k vectors) + 10k planted near-dups",
         "multiprobe": multiprobe,
-        "compact_debt_bits": compact_debt_bits,
-        "async_reband": async_reband,
         "shard_size": shard_size,
         "shards": rows,
         "worst_compact_stall_sec": max(stalls, default=None),
@@ -521,25 +476,13 @@ def main(filters) -> None:
 
     if "--compaction" in filters:
         mp = "--multiprobe" in filters
-        debt = 1 if "--debt" in filters else 0
-        use_async = "--async" in filters
-        comp = compaction_recall(
-            multiprobe=mp, compact_debt_bits=debt, async_reband=use_async
-        )
+        comp = compaction_recall(multiprobe=mp)
         out = os.path.join(ROOT, "emb_recall.json")
         merged = {}
         if os.path.exists(out):
             with open(out) as f:
                 merged = json.load(f)
-        key = (
-            "compaction_async"
-            if use_async
-            else (
-                "compaction_debt"
-                if debt
-                else ("compaction_multiprobe" if mp else "compaction")
-            )
-        )
+        key = "compaction_multiprobe" if mp else "compaction"
         merged[key] = comp
         with open(out, "w") as f:
             json.dump(merged, f, indent=1)
@@ -807,61 +750,6 @@ def _rewrite_scale_md(results: dict) -> None:
         )
         if comp.get("analysis"):
             lines.append("\n" + comp["analysis"])
-    comp_debt = results.get("compaction_debt")
-    if comp_debt:
-        shards = comp_debt["shards"]
-        boundaries = [r for r in shards if r["rebanded_this_shard"]]
-        base_boundaries = (
-            sum(1 for r in comp["shards"] if r["rebanded_this_shard"])
-            if comp
-            else None
-        )
-        last = shards[-1]
-        lines += [
-            "",
-            "### Same experiment, deferred arm "
-            "(`compact_debt_bits=1`, round 12)",
-            "",
-            f"{len(boundaries)} re-band stall(s) over the same shard "
-            f"ladder vs {base_boundaries} under debt=0 — boundary "
-            "shards (the p99 outliers) become geometrically rarer; "
-            "while the debt stands the store serves at the narrower "
-            "width (occupancy drifts up, so candidate volume and "
-            "recall can only rise), and the deferred compaction jumps "
-            f"straight to the adaptive width (final bits "
-            f"{last['n_bits']}, gen {last['banded_gen']}). Final "
-            f"≥0.9-band recall {last['recall_ge_0.9']}, planted "
-            f"recall {last['planted_recall']}; worst stall "
-            f"{comp_debt['worst_compact_stall_sec']} s, worst quiet "
-            f"ingest {comp_debt['worst_quiet_ingest_sec']} s.",
-        ]
-        if comp_debt.get("analysis"):
-            lines.append("\n" + comp_debt["analysis"])
-    comp_async = results.get("compaction_async")
-    if comp_async:
-        shards = comp_async["shards"]
-        last = shards[-1]
-        fins = [r["finalize_sec"] for r in shards if r.get("finalize_sec")]
-        stages = [r["stage_sec_bg"] for r in shards if r.get("stage_sec_bg")]
-        lines += [
-            "",
-            "### Same experiment, async arm "
-            "(`async_reband=True`, round 13)",
-            "",
-            "The boundary shard launches the O(n_unique) re-band into "
-            "a STAGING generation on a background thread (wall "
-            f"{stages} s, absorbed by no ingest call) and a later "
-            "trigger absorbs only the O(delta) catch-up + atomic meta "
-            f"swap: finalize stall(s) {fins} s vs the sync arm's "
-            f"{comp['worst_compact_stall_sec'] if comp else '—'} s "
-            "worst inline stall. Final bits "
-            f"{last['n_bits']}, gen {last['banded_gen']}; ≥0.9-band "
-            f"recall {last['recall_ge_0.9']}, planted recall "
-            f"{last['planted_recall']}; worst quiet ingest "
-            f"{comp_async['worst_quiet_ingest_sec']} s.",
-        ]
-        if comp_async.get("analysis"):
-            lines.append("\n" + comp_async["analysis"])
     comp_mp = results.get("compaction_multiprobe")
     if comp_mp:
         last = comp_mp["shards"][-1]
