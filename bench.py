@@ -194,7 +194,7 @@ def _stream_ingest_bench(spark) -> dict:
         shutil.rmtree(work, ignore_errors=True)
 
 
-def _session_stream_bench(spark) -> dict:
+def _session_stream_bench(spark, sessionizer) -> dict:
     """Stateful-streaming sessionization throughput (T5/A10/T7 path).
 
     The batch ``user_sessions`` timing in the headline set has no
@@ -203,6 +203,12 @@ def _session_stream_bench(spark) -> dict:
     applyInPandasWithState sessionizer with event-time-timeout expiry
     and a parquet sink — so the per-row state-store overhead has a
     number right next to the batch one.
+
+    ``sessionizer`` is ``streaming.stateful.session_stream`` (the
+    Python stateful arm) or ``session_stream_native`` (the JVM-native
+    session_window arm, round 13 — the Python arm's per-group dispatch
+    is the measured fourth-decade wall); parity pinned in
+    tests/test_session_stream.py.
     """
     import shutil
     import tempfile
@@ -210,23 +216,9 @@ def _session_stream_bench(spark) -> dict:
     import pyspark.sql.functions as F
 
     from pulsar_spark_spark.sources.tables import load_table
-    from pulsar_spark_spark.streaming.stateful import (
-        session_stream,
-        session_stream_native,
-    )
+    from pulsar_spark_spark.streaming.stateful import session_stream_native
 
-    # round 13: SPARK_GRAFT_SESSIONIZER=native routes the same bench
-    # through the JVM-native streaming session_window arm (the Python
-    # arm's per-group dispatch is the measured fourth-decade wall —
-    # see session_stream_native's docstring); parity pinned in
-    # tests/test_session_stream.py
-    arm = os.environ.get("SPARK_GRAFT_SESSIONIZER", "python")
-    if arm not in ("python", "native"):
-        raise ValueError(
-            f"SPARK_GRAFT_SESSIONIZER {arm!r}: accepted values are "
-            "'python', 'native'"
-        )
-    sessionizer = session_stream_native if arm == "native" else session_stream
+    arm = "native" if sessionizer is session_stream_native else "python"
     work = tempfile.mkdtemp(prefix="bench_sess_")
     try:
         ev = load_table(spark, "events", SF_DIR).select(
@@ -364,7 +356,7 @@ def _geotag_rescore_bench(spark) -> dict:
 
         # WARM-UP pass first (round 10): the loop's throughput climbs
         # ~2× over its first passes as C2 compiles the streaming
-        # machinery (measured in tools/rescore_ab.py:
+        # machinery (rescore_ab.json:
         # 10.6k → 17.5k → 21.0k rows/s back-to-back, then a 21.6k
         # plateau) — the round-9 "regression" to 17.4k was a single
         # cold-position capture, not code (the plain path is
@@ -442,7 +434,7 @@ def _geotag_rescore_bench(spark) -> dict:
                 "numbers AND the scale shape. Round 10 closed the "
                 "r7-vs-r9 rescore gap (21.4k vs 17.4k rows/s): the "
                 "plain path is diff-identical to round 7; "
-                "tools/rescore_ab.py measured the loop warming "
+                "an A/B (rescore_ab.json) measured the loop warming "
                 "10.6k -> 17.5k -> 21.0k -> 21.6k rows/s "
                 "back-to-back in one session (C2 compilation), so "
                 "the r9 capture was one cold-position pass. The "
@@ -567,7 +559,7 @@ def _lsh_probe_bench(spark) -> tuple[float, dict]:
         shutil.rmtree(work, ignore_errors=True)
 
 
-def _geofence_stream_bench(spark) -> dict:
+def _geofence_stream_bench(spark, state_buckets: "int | None" = None) -> dict:
     """Stateful geofence-machine throughput (G9/A10 path) — the
     reference's core streaming identity (TripTracker): broadcast
     containment locate (pure JVM expression) → applyInPandasWithState
@@ -620,14 +612,6 @@ def _geofence_stream_bench(spark) -> dict:
         located = stream.select(
             "user_id", "event_id", "ts_ms", locate_expr(fences).alias("cur_gf")
         )
-        # round 14: SPARK_GRAFT_GEOFENCE_BUCKETS=<B> routes the same
-        # bench through the bucketed-state arm (state keyed by
-        # hash(user_id) % B, per-bucket vectorized walk) — the
-        # dispatch-count fix for the high-cardinality wall; full-row
-        # parity pinned in tests/test_stateful_streaming.py
-        buckets_env = os.environ.get("SPARK_GRAFT_GEOFENCE_BUCKETS", "")
-        # "0" pins the per-user arm (the select_geofence_arm contract)
-        state_buckets = (int(buckets_env) or None) if buckets_env else None
         q = (
             geofence_alert_stream(located, state_buckets=state_buckets)
             .writeStream.format("parquet")
@@ -736,26 +720,21 @@ def _bucketed_geotag_bench(spark) -> tuple[float, dict]:
     timed part is the full registered query on the bucketed arm —
     zero-Exchange state scan, batch-only shuffle, cap on the merged
     uniques."""
-    from pulsar_spark_spark.plans.geo import ensure_geotag_state_layout
+    from pulsar_spark_spark.plans.geo import (
+        _geotag_merge_from_layout,
+        ensure_geotag_state_layout,
+    )
 
     t0 = time.perf_counter()
     ensure_geotag_state_layout(spark, SF_DIR)
     layout_sec = round(time.perf_counter() - t0, 3)
-    prev = os.environ.get("SPARK_GRAFT_GEOTAG_ARM")
-    os.environ["SPARK_GRAFT_GEOTAG_ARM"] = "bucketed"
-    try:
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            QUERIES["geotag_history_merge"](spark, SF_DIR).count()
-            sec = round(time.perf_counter() - t0, 3)
-            best = sec if best is None or sec < best else best
-            spark.catalog.clearCache()
-    finally:
-        if prev is None:
-            os.environ.pop("SPARK_GRAFT_GEOTAG_ARM", None)
-        else:
-            os.environ["SPARK_GRAFT_GEOTAG_ARM"] = prev
+    best = None
+    for _ in range(2):
+        t0 = time.perf_counter()
+        _geotag_merge_from_layout(spark, SF_DIR).count()
+        sec = round(time.perf_counter() - t0, 3)
+        best = sec if best is None or sec < best else best
+        spark.catalog.clearCache()
     return best, {
         "merge_sec": best,
         "layout_build_sec": layout_sec,
@@ -777,27 +756,23 @@ def _bucketed_refinement_bench(spark) -> tuple[float, dict]:
     offline (untimed, fingerprint-cached like the ANN indexes); the
     timed part is the full registered query on the bucketed arm:
     Exchange-free interval join + pre-partitioned kernel, no per-run
-    md5 projection."""
-    from pulsar_spark_spark.plans.kernels import ensure_refinement_layout
+    md5 projection. The layout floor is patched to -1 for the timed
+    runs, so the query serves from the layout at any corpus size."""
+    from unittest import mock
+
+    from pulsar_spark_spark.plans import kernels
 
     t0 = time.perf_counter()
-    ensure_refinement_layout(spark, SF_DIR)
+    kernels.ensure_refinement_layout(spark, SF_DIR)
     layout_sec = round(time.perf_counter() - t0, 3)
-    prev = os.environ.get("SPARK_GRAFT_REFINE_ARM")
-    os.environ["SPARK_GRAFT_REFINE_ARM"] = "bucketed"
-    try:
-        best = None
+    best = None
+    with mock.patch.object(kernels, "_REFINE_LAYOUT_FLOOR_ROWS", -1):
         for _ in range(2):
             t0 = time.perf_counter()
             QUERIES["delivery_refinement"](spark, SF_DIR).collect()
             sec = round(time.perf_counter() - t0, 3)
             best = sec if best is None or sec < best else best
             spark.catalog.clearCache()
-    finally:
-        if prev is None:
-            os.environ.pop("SPARK_GRAFT_REFINE_ARM", None)
-        else:
-            os.environ["SPARK_GRAFT_REFINE_ARM"] = prev
     return best, {
         "kernel_sec": best,
         "layout_build_sec": layout_sec,
@@ -912,6 +887,11 @@ def _slope_notes(slope_queries: dict) -> dict:
 
 
 def main() -> None:
+    from pulsar_spark_spark.streaming.stateful import (
+        session_stream,
+        session_stream_native,
+    )
+
     spark = get_session(app_name="pulsar_spark_spark_bench", master=f"local[{CPUS}]")
     spark.sparkContext.setLogLevel("ERROR")
     # JVM + first-read + Python-worker warmup (not counted).
@@ -1000,7 +980,7 @@ def main() -> None:
         "embedding_dedup_clusters": (
             "connected components at REPRESENTATIVE level over the "
             "guarded pair graph (one node per unique embedding), "
-            "member attach in the final aggregation; cc='auto' "
+            "member attach in the final aggregation; component_walk "
             "(round 8) probes min-label then falls back to the "
             "log-diameter star walk past an 8-round budget."
         ),
@@ -1054,21 +1034,8 @@ def main() -> None:
     # round 13: the JVM-native session_window arm next to the Python
     # stateful one (same fixture, same finality semantics — parity
     # pinned in pytest), so the per-round capture carries both arms.
-    # Both arms are pinned EXPLICITLY and any user-provided value is
-    # restored afterwards (r13 ADVICE: a pre-set `native` must not
-    # silently record native numbers under the python-arm key, and
-    # the capture must not destroy the caller's env).
-    _prior_arm = os.environ.get("SPARK_GRAFT_SESSIONIZER")
-    try:
-        os.environ["SPARK_GRAFT_SESSIONIZER"] = "python"
-        session = _session_stream_bench(spark)
-        os.environ["SPARK_GRAFT_SESSIONIZER"] = "native"
-        session_native = _session_stream_bench(spark)
-    finally:
-        if _prior_arm is None:
-            os.environ.pop("SPARK_GRAFT_SESSIONIZER", None)
-        else:
-            os.environ["SPARK_GRAFT_SESSIONIZER"] = _prior_arm
+    session = _session_stream_bench(spark, session_stream)
+    session_native = _session_stream_bench(spark, session_stream_native)
     rescore = _geotag_rescore_bench(spark)
     geofence = _geofence_stream_bench(spark)
 
@@ -1148,19 +1115,6 @@ def main() -> None:
                             "workers warmed outside timing; back-to-back "
                             "since round 6 -- see the timing-loop comment)",
                     "knob_notes": knob_notes,
-                    "round9_note": (
-                        "calibration_sec is a fixed data-independent "
-                        "codegen probe (min-of-3) — compare IT first "
-                        "across rounds: round 8's driver capture ran "
-                        "~17% hot and its total anchored a phantom "
-                        "regression. ANN serving rows no longer pay "
-                        "a per-call corpus count (adaptive knobs now "
-                        "resolve from memoized parquet footers). All "
-                        "per-query slope figures in these notes are "
-                        "generated from scale_slope.json at print "
-                        "time (round-8 hand-written numbers had "
-                        "drifted from a later re-measure)."
-                    ),
                     "calibration_sec": calibration_sec,
                     "streaming_ingest_detail": ingest,
                     "streaming_session_detail": session,

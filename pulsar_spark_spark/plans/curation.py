@@ -61,13 +61,9 @@ _SAMPLE_TARGET = 3
 
 _HASH_SCALE = float(1 << 60)  # md5_i64 yields a uniform 60-bit int
 
-# Footer-resolved broadcast gate for the decontamination benchmark
-# side: benchmark docs are 1/_BENCH_MOD of the corpus at ~200 winnowed
-# grams each, so 500k corpus docs ≈ 4M bench gram rows — inside
-# broadcast_if_bounded's 5M-row bound (~0.5 GB framed) with margin.
-# Below this the broadcast needs no counting job; above it (or for
-# footerless in-memory relations) the counted guard decides.
-_BENCH_BROADCAST_MAX_DOCS = 500_000
+# Broadcast bound for the decontamination benchmark side, in gram
+# rows: broadcast_if_bounded's 5M-row default (~0.5 GB framed).
+_BENCH_BROADCAST_MAX_ROWS = 5_000_000
 
 
 # Oracle bodies (no ORDER BY) — composed into the single registered
@@ -124,6 +120,34 @@ _SAMPLE_ORACLE = f"""
 """
 
 
+def _bench_gram_rows(docs: DataFrame) -> "int | None":
+    """Upper estimate of the benchmark side's gram rows from the
+    parquet FOOTERS of ``docs`` (zero Spark jobs): a document has at
+    most one distinct word 3-gram per token and one token per 2 bytes
+    of uncompressed ``text``, and 1/``_BENCH_MOD`` of the corpus is
+    benchmark. ``None`` for in-memory relations and for files whose
+    footer cannot be read."""
+    import pyarrow.parquet as pq
+
+    files = docs.inputFiles()
+    if not files:
+        return None
+    text_bytes = 0
+    for p in files:
+        try:
+            meta = pq.ParquetFile(p[5:] if p.startswith("file:") else p).metadata
+        except (OSError, ValueError):
+            return None
+        for i in range(meta.num_row_groups):
+            rg = meta.row_group(i)
+            text_bytes += sum(
+                rg.column(j).total_uncompressed_size
+                for j in range(rg.num_columns)
+                if rg.column(j).path_in_schema == "text"
+            )
+    return text_bytes // 2 // _BENCH_MOD
+
+
 def doc_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: corpus documents sharing ≥ K distinct
     word-3-grams with at least one benchmark document, with the number
@@ -135,12 +159,13 @@ def doc_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself — 1/25 of its gram rows — so an unconditional broadcast
     hint grows linearly with corpus size and would blow the 8 GB
     broadcast limit / driver heap at the 100 TB target). The bound is
-    resolved from the parquet FOOTER row count (zero Spark jobs, the
-    resolve_band_plan discipline): below ``_BENCH_BROADCAST_MAX_DOCS``
-    the benchmark side broadcasts unconditionally; above it — or when
-    the corpus size is unknowable from footers — the counted
-    ``broadcast_if_bounded`` guard decides, degrading to the shuffle
-    join at the 100 TB target. Round 15: the r14 form ran the counted
+    checked against the gram rows estimated from the parquet FOOTERS
+    (:func:`_bench_gram_rows`, zero Spark jobs — the resolve_band_plan
+    discipline): within ``_BENCH_BROADCAST_MAX_ROWS`` the benchmark
+    side broadcasts unconditionally; above it — a big corpus or a few
+    very long documents — or when footers cannot bound it, the
+    counted ``broadcast_if_bounded`` guard decides, degrading to the
+    shuffle join at the 100 TB target. Round 15: the r14 form ran the counted
     guard (a count job) over an EXTRA localCheckpoint of the benchmark
     grams on every fixture-scale run, which is what regressed
     doc_curation vs r13 (cross-tree A/B 1.50 vs 1.82 s, r13 ahead in
@@ -150,21 +175,20 @@ def doc_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     The df cap bounds any single gram's fanout on both sides.
     """
     from pulsar_spark_spark.operators.checkpoint import broadcast_if_bounded
-    from pulsar_spark_spark.plans.text import _docs_rows
 
     docs = load_table(spark, "documents", sf_dir)
     grams = pruned_grams(docs, w=1)
     bench = grams.filter(col("doc_id") % _BENCH_MOD == 0).select(
         col("doc_id").alias("bench_id"), "g"
     )
-    n_docs = _docs_rows(docs, count_fallback=False)
-    if n_docs is not None and n_docs <= _BENCH_BROADCAST_MAX_DOCS:
+    est = _bench_gram_rows(docs)
+    if est is not None and est <= _BENCH_BROADCAST_MAX_ROWS:
         bench_side = F.broadcast(bench)
     else:
         # the counted guard re-scans pruned_grams' existing checkpoint
         # (the filter pushes into the block scan) — no extra
         # materialization needed for the count to be cheap
-        bench_side = broadcast_if_bounded(bench)
+        bench_side = broadcast_if_bounded(bench, _BENCH_BROADCAST_MAX_ROWS)
     corpus = grams.filter(col("doc_id") % _BENCH_MOD != 0)
     hits = (
         corpus.join(bench_side, "g")

@@ -34,8 +34,6 @@ Reference semantics re-expressed:
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql.functions import broadcast, col
@@ -49,7 +47,11 @@ from pulsar_spark_spark.functions.geo import (
 from pulsar_spark_spark.functions.text import md5_i64
 from pulsar_spark_spark.operators.checkpoint import materialize
 from pulsar_spark_spark.plans.registry import query
-from pulsar_spark_spark.sources.tables import load_table, spread_scan
+from pulsar_spark_spark.sources.tables import (
+    is_narrow_scan,
+    load_table,
+    spread_scan,
+)
 
 # ---------------------------------------------------------------------
 # deterministic geo projection (Spark + DuckDB twins)
@@ -510,19 +512,9 @@ def geotag_history_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     never by rounding a double (round() half-case behavior is not
     oracle-portable).
     """
-    import os
-
     from pulsar_spark_spark.plans.kernels import _events_rows
 
-    arm = os.environ.get(_GEOTAG_ARM_ENV, "auto")
-    if arm not in ("auto", "plain", "bucketed"):
-        raise ValueError(
-            f"{_GEOTAG_ARM_ENV} {arm!r}: accepted values are "
-            "'auto', 'plain', 'bucketed'"
-        )
-    if arm == "plain" or (
-        arm == "auto" and _events_rows(sf_dir) <= _GEOTAG_LAYOUT_FLOOR_ROWS
-    ):
+    if _events_rows(sf_dir) <= _GEOTAG_LAYOUT_FLOOR_ROWS:
         return _geotag_merge(_geotag_points(spark, sf_dir))
     return _geotag_merge_from_layout(spark, sf_dir)
 
@@ -586,11 +578,7 @@ def _geotag_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir).filter(
         col("event_type").isNotNull()
     )
-    par = spark.sparkContext.defaultParallelism
-    if (
-        os.environ.get("SPARK_GRAFT_SCAN_SPREAD", "") != "0"
-        and ev.rdd.getNumPartitions() < par
-    ):
+    if is_narrow_scan(ev):
         n = int(spark.conf.get("spark.sql.shuffle.partitions"))
         return _geotag_pts(ev.repartition(n, "user_id")).drop("event_type")
     return (
@@ -656,7 +644,6 @@ def _geotag_merge(pts: DataFrame) -> DataFrame:
 # Exchange of the merged UNIQUES for the cap window — never the raw
 # corpus. Same floor discipline as kernels._refinement_input: below
 # ~1.5M events the layout build costs more than it saves.
-_GEOTAG_ARM_ENV = "SPARK_GRAFT_GEOTAG_ARM"
 _GEOTAG_LAYOUT_FLOOR_ROWS = 1_500_000
 _GEOTAG_KEY = ["user_id", "lat", "lng", "accuracy"]
 

@@ -719,9 +719,9 @@ def _scaled_geo_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Queries route to the layout above this many event rows ('auto'):
 # every gate/bench corpus (sf0.001/0.01/0.1 ≤ 1M rows) keeps the
 # committed plan the plan-audit tests pin; the 100×/1000× scale points
-# serve from the layout. SPARK_GRAFT_REFINE_ARM=plain|bucketed
-# overrides (the scale harness pins 'bucketed' at every decade so the
-# slope is one arm's slope, and the bench's A/B row pins each arm).
+# serve from the layout. The scale harness and the bench's bucketed
+# row patch this floor to serve every decade from the layout (one
+# arm's slope); tests patch it to pin either arm.
 _REFINE_LAYOUT_FLOOR_ROWS = 1_500_000
 _EVENTS_ROWS_MEMO: dict = {}
 
@@ -861,17 +861,7 @@ def _refinement_input(
     files (the :func:`_geo_points` argument), while localCheckpointing
     it would both copy the full relation into the block manager and
     hide the scan's bucket partitioning from the planner."""
-    import os
-
-    arm = os.environ.get("SPARK_GRAFT_REFINE_ARM", "auto")
-    if arm not in ("auto", "plain", "bucketed"):
-        raise ValueError(
-            f"SPARK_GRAFT_REFINE_ARM {arm!r}: accepted values are "
-            "'auto', 'plain', 'bucketed'"
-        )
-    if arm == "plain" or (
-        arm == "auto" and _events_rows(sf_dir) <= _REFINE_LAYOUT_FLOOR_ROWS
-    ):
+    if _events_rows(sf_dir) <= _REFINE_LAYOUT_FLOOR_ROWS:
         return _scaled_geo_points(spark, sf_dir), False
     table = ensure_refinement_layout(spark, sf_dir)
     return spark.table(table), True
@@ -999,8 +989,7 @@ def delivery_refinement(spark: SparkSession, sf_dir: str) -> DataFrame:
     margins for every float decision in the chain are measured and
     pinned in tests/test_kernel_margins.py.
 
-    Round 11: above ``_REFINE_LAYOUT_FLOOR_ROWS`` (or with
-    ``SPARK_GRAFT_REFINE_ARM=bucketed``) the pipeline serves from the
+    Round 11: above ``_REFINE_LAYOUT_FLOOR_ROWS`` the pipeline serves from the
     write-once bucketed layout — identical rows (pinned in
     tests/test_bucketed.py), zero per-run projection/shuffle cost.
     """

@@ -22,18 +22,34 @@ that scale with the data (customer, supplier, orders, lineitem) are
 left to AQE's runtime strategy choice. Everything else shuffles on
 the natural join key with AQE handling skew; aggregates
 are expressed so Catalyst plans partial (map-side) aggregation.
-Money sums are rounded to 2 decimals on BOTH engine and oracle side so
-the driver's value-hash is stable across summation orders.
+Money sums are taken over the money columns cast to their TPC-H type,
+DECIMAL(15,2), on BOTH engine and oracle side: the sums are exact, so
+rounding to 2 decimals gives the same cent in every engine and every
+summation order. Over doubles an exact total of 397487.715 summed to
+397487.71499999997, which DuckDB rounded to .72 and Spark to .71. Each
+rounded sum is cast back to DOUBLE, so the output schemas are
+unchanged.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql.functions import broadcast, col
 
 from pulsar_spark_spark.plans.registry import query
 from pulsar_spark_spark.sources.tables import load_table
+
+
+def _money(name: str) -> Column:
+    """A money column at its TPC-H type, DECIMAL(15,2)."""
+    return col(name).cast("decimal(15,2)")
+
+
+def _money_sum(amount: Column) -> Column:
+    """Exact sum of a DECIMAL money expression, rounded to cents and
+    cast back to DOUBLE."""
+    return F.round(F.sum(amount), 2).cast("double")
 
 
 # --------------------------------------------------------------------
@@ -46,14 +62,20 @@ from pulsar_spark_spark.sources.tables import load_table
             l_returnflag,
             l_linestatus,
             round(sum(l_quantity), 2)                                    AS sum_qty,
-            round(sum(l_extendedprice), 2)                               AS sum_base_price,
-            round(sum(l_extendedprice * (1 - l_discount)), 2)            AS sum_disc_price,
-            round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
+            CAST(round(sum(p), 2) AS DOUBLE)                             AS sum_base_price,
+            CAST(round(sum(p * (1 - d)), 2) AS DOUBLE)                   AS sum_disc_price,
+            CAST(round(sum(p * (1 - d) * (1 + t)), 2) AS DOUBLE)         AS sum_charge,
             round(avg(l_quantity), 4)                                    AS avg_qty,
             round(avg(l_extendedprice), 4)                               AS avg_price,
             round(avg(l_discount), 4)                                    AS avg_disc,
             count(*)                                                     AS count_order
-        FROM lineitem
+        FROM (
+            SELECT *,
+                   CAST(l_extendedprice AS DECIMAL(15,2)) AS p,
+                   CAST(l_discount AS DECIMAL(15,2))      AS d,
+                   CAST(l_tax AS DECIMAL(15,2))           AS t
+            FROM lineitem
+        ) lineitem
         WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
         GROUP BY l_returnflag, l_linestatus
         ORDER BY l_returnflag, l_linestatus
@@ -68,15 +90,15 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     |partitions|×|groups| pre-aggregated rows.
     """
     li = load_table(spark, "lineitem", sf_dir)
-    disc_price = col("l_extendedprice") * (1 - col("l_discount"))
+    disc_price = _money("l_extendedprice") * (1 - _money("l_discount"))
     return (
         li.filter(col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc_price), 2).alias("sum_disc_price"),
-            F.round(F.sum(disc_price * (1 + col("l_tax"))), 2).alias("sum_charge"),
+            _money_sum(_money("l_extendedprice")).alias("sum_base_price"),
+            _money_sum(disc_price).alias("sum_disc_price"),
+            _money_sum(disc_price * (1 + _money("l_tax"))).alias("sum_charge"),
             F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
             F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
             F.round(F.avg("l_discount"), 4).alias("avg_disc"),
@@ -94,7 +116,9 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         SELECT
             l.l_orderkey                                            AS l_orderkey,
-            round(sum(l.l_extendedprice * (1 - l.l_discount)), 2)   AS revenue,
+            CAST(round(sum(CAST(l.l_extendedprice AS DECIMAL(15,2))
+                           * (1 - CAST(l.l_discount AS DECIMAL(15,2)))), 2)
+                 AS DOUBLE)                                         AS revenue,
             o.o_orderdate                                           AS o_orderdate
         FROM customer c
         JOIN orders o    ON c.c_custkey = o.o_custkey
@@ -126,7 +150,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c, o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate")
         .agg(
-            F.round(F.sum(col("l_extendedprice") * (1 - col("l_discount"))), 2).alias(
+            _money_sum(_money("l_extendedprice") * (1 - _money("l_discount"))).alias(
                 "revenue"
             )
         )
@@ -144,7 +168,9 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         SELECT
             n.n_name                                               AS n_name,
-            round(sum(l.l_extendedprice * (1 - l.l_discount)), 2)  AS revenue
+            CAST(round(sum(CAST(l.l_extendedprice AS DECIMAL(15,2))
+                           * (1 - CAST(l.l_discount AS DECIMAL(15,2)))), 2)
+                 AS DOUBLE)                                        AS revenue
         FROM customer c
         JOIN orders o   ON c.c_custkey = o.o_custkey
         JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -183,7 +209,7 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(
-            F.round(F.sum(col("l_extendedprice") * (1 - col("l_discount"))), 2).alias(
+            _money_sum(_money("l_extendedprice") * (1 - _money("l_discount"))).alias(
                 "revenue"
             )
         )

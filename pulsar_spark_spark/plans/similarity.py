@@ -1128,7 +1128,6 @@ def emb_components(
     n_tables: int = _EMB_TABLES,
     n_bits: "int | None" = None,
     bucket_cap: int = _EMB_BUCKET_CAP,
-    cc: str = "auto",
     multiprobe: "bool | None" = None,
 ) -> DataFrame:
     """(node=vec_id, component=min vec_id in its near-dup cluster) for
@@ -1137,18 +1136,16 @@ def emb_components(
     ``doc_components``: cross-group verified pairs are the edges; a
     verified (rep, rep) self-pair marks a multi-member group as a
     cluster even with no cross edges; members then join in via their
-    vector key. ``cc``: ``"auto"`` (default — min-label fast path,
-    star fallback past the iteration budget; rolled-replica corpora
-    DO produce chains deep enough to need it, measured at 10× scale
-    round 8) or ``"min_label"`` / ``"star"`` to force one — same
-    dispatch as ``doc_components``."""
+    vector key. :func:`component_walk` picks the walk (rolled-replica
+    corpora DO produce chains deep enough to need its star fallback,
+    measured at 10× scale round 8)."""
     from pulsar_spark_spark.plans.text import component_walk
 
     keyed, reps, verified = emb_verified_rep_pairs(
         emb, n_tables, n_bits, bucket_cap, multiprobe=multiprobe
     )
     cross = verified.filter(col("rep_a") != col("rep_b"))
-    comp_rep = component_walk(cross, "rep_a", "rep_b", cc)
+    comp_rep = component_walk(cross, "rep_a", "rep_b")
     self_only = (
         verified.filter(col("rep_a") == col("rep_b"))
         .select(col("rep_a").alias("node"))

@@ -383,48 +383,24 @@ def _near_dup_oracle(band_cap: int = _BAND_CAP) -> str:
     """
 
 
-# Hot-bucket cap implementation. "window" = count-window over the
-# bucket key (its shuffle pre-partitions the following self-join);
-# "agg" = map-side-combinable count aggregate, over-cap keys broadcast
-# back as a left-anti join (no sort, but the self-join re-shuffles).
-# Round-8 same-session interleaved A/B (min-of-2, sf0.1 AND 10x data):
-# window wins doc_near_dup_pairs by 41%/22% (sf0.1/10x),
-# doc_dedup_clusters by 13%/4%, embedding_near_dup_pairs by 10% at
-# 10x (the one agg win, 13% at sf0.1, is inside the noise band) —
-# the exchange reuse into the self-join beats avoiding the sort, so
-# the WINDOW IS OPTIMAL here and stays the default; "agg" is kept
-# for re-measurement on other data shapes.
-_CAP_MODE = "window"
-
-# Min-label CC init: "nbr_min" seeds labels with the closed-
-# neighborhood minimum (one aggregate) so shallow components converge
-# a round earlier; "self" is the classic label=node seed, kept for
-# A/B re-measurement. Round-8 same-session interleaved A/B (min-of-2,
-# sf0.1): nbr_min wins doc_dedup_clusters by 8% and
-# embedding_dedup_clusters by 15% (one fewer join round on the
-# pair/triangle graphs the near-dup pipeline actually produces).
-_CC_INIT = "nbr_min"
-
-
 def cap_hot_buckets(banded: DataFrame, keys: list, cap: int) -> DataFrame:
     """Drop rows of ``banded`` whose bucket (the ``keys`` tuple) holds
     more than ``cap`` rows — the boilerplate guard shared by the text
-    band cap and the embedding (table, bucket) cap."""
-    if _CAP_MODE == "window":
-        return (
-            banded.withColumn(
-                "bn", F.count(F.lit(1)).over(Window.partitionBy(*keys))
-            )
-            .filter(col("bn") <= cap)
-            .drop("bn")
+    band cap and the embedding (table, bucket) cap.
+
+    A count window over the bucket key, not a count aggregate
+    anti-joined back: the window's shuffle pre-partitions the
+    following self-join. Round-8 interleaved A/B (min-of-2, sf0.1 and
+    10x): the window won doc_near_dup_pairs by 41%/22%,
+    doc_dedup_clusters by 13%/4% and embedding_near_dup_pairs by 10%
+    at 10x."""
+    return (
+        banded.withColumn(
+            "bn", F.count(F.lit(1)).over(Window.partitionBy(*keys))
         )
-    hot = (
-        banded.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("bn"))
-        .filter(col("bn") > cap)
-        .select(*keys)
+        .filter(col("bn") <= cap)
+        .drop("bn")
     )
-    return banded.join(F.broadcast(hot), keys, "left_anti")
 
 
 def hot_bucket_stats(banded: DataFrame, keys: list, cap: int) -> DataFrame:
@@ -1866,7 +1842,7 @@ def doc_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------
 class CCBudgetExceeded(RuntimeError):
     """Raised when a component walk exhausts its iteration budget —
-    the signal ``cc='auto'`` dispatch catches to fall back from the
+    the signal :func:`component_walk` catches to fall back from the
     min-label fast path to the ~log-diameter star walk. Subclasses
     RuntimeError so pre-round-8 callers matching that type still
     work."""
@@ -1920,21 +1896,15 @@ def connected_components_min_label(
     # join) instead of label = self: pair/triangle components — the
     # near-dup common case — then reach their fixpoint before the
     # first propagation round, so the loop runs ONCE (the detect
-    # round) instead of twice.
-    if _CC_INIT == "nbr_min":
-        labels = (
-            sym.groupBy(col("src").alias("node"))
-            .agg(F.min("dst").alias("nbr_min"))
-            .select("node", F.least("node", col("nbr_min")).alias("label"))
-            .transform(materialize)
-        )
-    else:
-        labels = (
-            sym.select(col("src").alias("node"))
-            .distinct()
-            .withColumn("label", col("node"))
-            .transform(materialize)
-        )
+    # round) instead of twice. Round-8 interleaved A/B (min-of-2,
+    # sf0.1): 8% faster doc_dedup_clusters, 15% faster
+    # embedding_dedup_clusters than the label = self seed.
+    labels = (
+        sym.groupBy(col("src").alias("node"))
+        .agg(F.min("dst").alias("nbr_min"))
+        .select("node", F.least("node", col("nbr_min")).alias("label"))
+        .transform(materialize)
+    )
     # Convergence by label SUM: labels only ever decrease under
     # min-propagation, so the sum is strictly decreasing until the
     # fixpoint — one scalar read per round replaces the second
@@ -2147,13 +2117,11 @@ def _union_find_components(spark: SparkSession, rows) -> DataFrame:
 
 
 def component_walk(
-    edges: DataFrame, a: str = "doc_a", b: str = "doc_b", cc: str = "auto"
+    edges: DataFrame, a: str = "doc_a", b: str = "doc_b"
 ) -> DataFrame:
-    """Dispatch a connected-components walk by ``cc``.
+    """Pick and run a connected-components walk for ``edges``.
 
-    ``"min_label"`` and ``"star"`` force that algorithm. ``"auto"``
-    (the production default for the registered cluster queries) first
-    collects at most ``_LOCAL_WALK_MAX_EDGES + 1`` edges in one bounded
+    It first collects at most ``_LOCAL_WALK_MAX_EDGES + 1`` edges in one bounded
     job, and a graph within the bound resolves from those same rows by
     driver-local union-find (:func:`_union_find_components`), so an
     unmaterialized edge lineage runs once — round 15, interleaved
@@ -2167,14 +2135,10 @@ def component_walk(
     back to the ~log(diameter) star walk instead of failing the
     pipeline. The wasted probe rounds replay the checkpointed edge
     relation, not the LSH/verify chain, so the retry costs
-    iterations, not candidate generation.
+    iterations, not candidate generation. Tests pin either walk by
+    calling :func:`connected_components_min_label` or
+    :func:`connected_components_star` directly.
     """
-    if cc == "min_label":
-        return connected_components_min_label(edges, a, b)
-    if cc == "star":
-        return connected_components_star(edges, a, b)
-    if cc != "auto":
-        raise ValueError(f"cc must be min_label/star/auto, got {cc!r}")
     rows = (
         edges.select(col(a).cast("long").alias("x"), col(b).cast("long").alias("y"))
         .limit(_LOCAL_WALK_MAX_EDGES + 1)
@@ -2286,7 +2250,6 @@ def doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_components(
     docs: DataFrame,
     band_cap: int = _BAND_CAP,
-    cc: str = "auto",
     plan: "tuple[int, int, int] | str | None" = "auto",
 ) -> DataFrame:
     """(node=doc_id, component=min doc_id in its near-dup cluster) for
@@ -2299,16 +2262,12 @@ def doc_components(
     iterative part touches one node per unique text: cross-group
     verified pairs are the edges; a verified (rep, rep) self-pair
     marks a multi-member group as a cluster even with no cross edges;
-    members then join in via their text key.
-
-    ``cc`` picks the component walk (see :func:`component_walk`):
-    ``"auto"`` (default — min-label fast path, star fallback if the
-    graph turns out deeper than the iteration budget), or
-    ``"min_label"`` / ``"star"`` to force one.
+    members then join in via their text key; :func:`component_walk`
+    picks the walk.
     """
     keyed, rel, verified = verified_rep_pairs(docs, band_cap, plan)
     cross = verified.filter(col("rep_a") != col("rep_b"))
-    comp_rep = component_walk(cross, "rep_a", "rep_b", cc)
+    comp_rep = component_walk(cross, "rep_a", "rep_b")
     self_only = (
         verified.filter(col("rep_a") == col("rep_b"))
         .select(col("rep_a").alias("node"))

@@ -32,29 +32,6 @@ from pyspark.sql import SparkSession
 _DEFAULT_LOCAL_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
-def _local_cores() -> int:
-    """Task-slot count for local mode, honoring the Arrow-heavy
-    measurement profile.
-
-    ``SPARK_GRAFT_ARROW_PROFILE=1`` halves the local task slots
-    (floor 8): a local[N] JVM runs N task threads AND — during
-    mapInArrow/mapInPandas stages — N Python workers on the same N
-    cores, a structural 2× oversubscription measured as ~25% wall tax
-    on Arrow-dominated stages (SCALE.md round 10: the 1000× signature
-    stage ran 84 s on local[32] vs 63 s on local[16]). Halving slots
-    gives each (JVM thread, Python worker) pair a core. This is a
-    MEASUREMENT profile for local tier captures (tools/scale_slope.py
-    sets it for the corpus-family queries); a real cluster solves the
-    same problem by sizing executor cores below the node's physical
-    cores and reserving spark.executor.pyspark.memory — not by this
-    knob.
-    """
-    cpus = int(_DEFAULT_LOCAL_CPUS)
-    if os.environ.get("SPARK_GRAFT_ARROW_PROFILE", "") not in ("", "0"):
-        return max(8, cpus // 2)
-    return cpus
-
-
 def arrow_stage_width(spark: "SparkSession") -> int:
     """Partition count for a mapInArrow/mapInPandas STAGE INPUT on
     local masters.
@@ -63,12 +40,11 @@ def arrow_stage_width(spark: "SparkSession") -> int:
     Python workers on the same N cores, a structural 2×
     oversubscription measured as ~25% wall tax (SCALE.md round 10:
     the 1000× signature stage ran 84 s on local[32] vs 63 s on
-    local[16]). The session-wide ``SPARK_GRAFT_ARROW_PROFILE`` knob
-    halves the SLOTS, which fixes Arrow stages but doubles every
-    pure-JVM stage wall in the same session (COVERAGE.md: the hv
-    recompute ran 66 s at 16 slots vs ~15 s at 32 — mixed pipelines
-    could not get both stages' best). This helper is the per-stage
-    form: cap only the ARROW STAGE'S width at half the slots
+    local[16]). Halving the session's SLOTS fixes Arrow stages but
+    doubles every pure-JVM stage wall in the same session
+    (COVERAGE.md: the hv recompute ran 66 s at 16 slots vs ~15 s at
+    32 — mixed pipelines could not get both stages' best). This
+    helper is the per-stage form: cap only the ARROW STAGE'S width at half the slots
     (floor 8) by repartitioning its input, so at most cores/2 Arrow
     tasks run concurrently — each (JVM thread, Python worker) pair
     gets a core — while every JVM stage in the session keeps full
@@ -76,16 +52,13 @@ def arrow_stage_width(spark: "SparkSession") -> int:
     both the Arrow banding stage and the JVM hv-recompute stage at
     their solo-best walls in ONE full-width session (SCALE.md).
 
-    Under the legacy session-wide knob (slots already halved) and on
-    non-local masters (a cluster solves oversubscription by executor
-    sizing, and its task slots are not the driver's cores) this
-    returns the standard 2×-parallelism spread instead.
+    On non-local masters (a cluster solves oversubscription by
+    executor sizing, and its task slots are not the driver's cores)
+    this returns the standard 2×-parallelism spread instead.
     """
     sc = spark.sparkContext
     par = sc.defaultParallelism
-    if sc.master.startswith("local") and os.environ.get(
-        "SPARK_GRAFT_ARROW_PROFILE", ""
-    ) in ("", "0"):
+    if sc.master.startswith("local"):
         return max(8, par // 2)
     return par * 2
 
@@ -132,20 +105,13 @@ def select_state_store(
     get the per-box figure the crossover was measured at. On local
     masters the whole state lives in one JVM, so executors=1. Spark
     honors the provider conf per started query, so call this before
-    ``writeStream.start()``; an explicit ``SPARK_GRAFT_STATE_STORE``
-    env pin always wins (the operator knows best). Returns the arm
-    chosen: ``"rocksdb"`` or ``"hdfs"``.
+    ``writeStream.start()``. Returns the arm chosen: ``"rocksdb"`` or
+    ``"hdfs"``.
     """
-    env = os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower()
-    if env in ("rocksdb", "hdfs"):
-        arm = env
-    else:
-        if executors is None:
-            executors = executor_count(spark)
-        per_box = estimated_keys / max(1, executors)
-        arm = (
-            "rocksdb" if per_box >= STATE_STORE_CROSSOVER_KEYS else "hdfs"
-        )
+    if executors is None:
+        executors = executor_count(spark)
+    per_box = estimated_keys / max(1, executors)
+    arm = "rocksdb" if per_box >= STATE_STORE_CROSSOVER_KEYS else "hdfs"
     if arm == "rocksdb":
         spark.conf.set(_STATE_STORE_KEY, _ROCKSDB_PROVIDER)
     else:
@@ -163,7 +129,7 @@ def get_session(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Create (or fetch) the engine SparkSession."""
-    cores = _local_cores()
+    cores = int(_DEFAULT_LOCAL_CPUS)
     master = master or f"local[{cores}]"
     builder = (
         SparkSession.builder.appName(app_name)
@@ -201,10 +167,11 @@ def get_session(
     # batch — measured fine through 100× state cardinality
     # (stream_scale.json: throughput RISES to 150k keys), but at
     # cluster scale with 10⁸+ keyed sessions the executor heap becomes
-    # the ceiling; SPARK_GRAFT_STATE_STORE=rocksdb flips every
-    # stateful stream (sessionizer, geofence machine, dedup-upsert) to
-    # Spark's built-in RocksDB provider (off-heap, incremental
-    # checkpointing) without touching any pipeline code. Pinned by
+    # the ceiling; extra_conf={_STATE_STORE_KEY: _ROCKSDB_PROVIDER}
+    # (or select_state_store at runtime) flips every stateful stream
+    # (sessionizer, geofence machine, dedup-upsert) to Spark's
+    # built-in RocksDB provider (off-heap, incremental checkpointing)
+    # without touching any pipeline code. Pinned by
     # tests/test_stateful_streaming.py::test_session_stream_rocksdb.
     # Switch rule (geofence machine, stream_scale.json, round 13): the
     # crossover is LOCATED at ~0.5M keys per box — on-heap wins at
@@ -213,10 +180,6 @@ def get_session(
     # RocksDB once per-executor state cardinality approaches ~0.5M
     # keys (or earlier when state SIZE, not throughput, is the
     # binding constraint: incremental checkpointing caps heap).
-    if os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb":
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -141,14 +141,18 @@ def spread_scan(df: DataFrame) -> DataFrame:
     The explicit numPartitions pins the width — AQE's coalescing would
     fold a fixture-sized keyless shuffle back to ~1 partition
     (parallelismFirst's 1 MB floor) and re-serialize the derivation.
-    ``SPARK_GRAFT_SCAN_SPREAD=0`` disables (measurement/bisect knob).
     """
-    if os.environ.get("SPARK_GRAFT_SCAN_SPREAD", "") == "0":
+    if not is_narrow_scan(df):
         return df
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
+def is_narrow_scan(df: DataFrame) -> bool:
+    """True when ``df`` has fewer partitions than the session's
+    parallelism — the one width test behind :func:`spread_scan` and
+    the geotag merge's derivation placement."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= par:
-        return df
-    return df.repartition(par)
+    return df.rdd.getNumPartitions() < par
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:

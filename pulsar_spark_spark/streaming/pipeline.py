@@ -22,7 +22,7 @@ Structured Streaming subsumes each piece (SURVEY.md §2.1/2.11):
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.functions import col
 from pyspark.sql.streaming import StreamingQuery
 
@@ -307,7 +307,8 @@ def run_geotag_rescore_stream(
        (``apply_best_latlng``: JVM max_by pre-dispatch for guard
        groups, Arrow+Python only for 4..500-point histories);
     4. upserts one record per key — history array + best point +
-       version=batch_id — through the crash-safe K1 sink. Replaying a
+       version = greatest(stored version, newest batch point as
+       (ts_ms, event_id)) — through the crash-safe K1 sink. Replaying a
        batch rebuilds identical records at the same version, and new
        rows win version ties, so the T3 commit-after-write contract
        holds without the reference's failure window.
@@ -391,6 +392,10 @@ def run_geotag_rescore_stream(
             ),
             eager=True,
         )
+        # Every point carries a version candidate ``__v``: a batch
+        # point its own (ts_ms, event_id), a stored point its record's
+        # stored version.
+        batch_v = new_pts.withColumn("__v", F.struct("ts_ms", "event_id"))
         try:
             state = (
                 read_upsert_bucketed(spark, state_table, state_path)
@@ -400,7 +405,7 @@ def run_geotag_rescore_stream(
             state_pts = (
                 state.join(new_pts.select("user_id").distinct(), "user_id")
                 .select(
-                    "user_id", F.explode("history").alias("h")
+                    "user_id", "version", F.explode("history").alias("h")
                 )
                 .select(
                     "user_id",
@@ -409,23 +414,29 @@ def run_geotag_rescore_stream(
                     col("h.lat").alias("lat"),
                     col("h.lng").alias("lng"),
                     col("h.accuracy").alias("accuracy"),
+                    col("version").alias("__v"),
                 )
             )
-            pts = state_pts.unionByName(new_pts)
+            pts = state_pts.unionByName(batch_v)
         except FileNotFoundError:
-            pts = new_pts
+            pts = batch_v
         from pulsar_spark_spark.plans.geo import dedup_then_cap
 
+        # version is DATA-derived, not the stream's batch_id: batch_id
+        # restarts at 0 with a fresh checkpoint dir, and a merge
+        # against surviving state would then silently lose to the
+        # stored higher versions for every key until the counter
+        # caught up. It is greatest(stored version, newest batch
+        # point), taken over the union BEFORE dedup and cap: the
+        # capped history's own newest point can drop below the stored
+        # version (a batch's older duplicate of the stored newest
+        # triple replaces it), and the upsert would then keep the old
+        # record and lose the update. The max window shares the
+        # user_id clustering the dedup and cap windows use, and a
+        # replayed batch re-derives the same version, so
+        # new-wins-ties keeps replays idempotent.
+        pts = pts.withColumn("__v", F.max("__v").over(Window.partitionBy("user_id")))
         capped = dedup_then_cap(pts, "ts_ms", history_cap)
-        # version is DATA-derived (the capped history's newest point),
-        # not the stream's batch_id: batch_id restarts at 0 with a
-        # fresh checkpoint dir, and a merge against surviving state
-        # would then silently lose to the stored higher versions for
-        # every key until the counter caught up — the stream runs
-        # green while discarding all output. max(ts_ms, event_id) is
-        # monotone in the data per user (the merged capped set can
-        # only grow newer), and a replayed batch re-derives the same
-        # version, so new-wins-ties keeps replays idempotent.
         record = (
             capped.groupBy("user_id")
             .agg(
@@ -434,9 +445,9 @@ def run_geotag_rescore_stream(
                         F.struct("ts_ms", "event_id", "lat", "lng", "accuracy")
                     )
                 ).alias("history"),
-                F.max(F.struct("ts_ms", "event_id")).alias("version"),
+                F.max("__v").alias("version"),
             )
-            .join(apply_best_latlng(capped), "user_id")
+            .join(apply_best_latlng(capped.drop("__v")), "user_id")
         )
         if use_bucketed:
             # X4/T6 at scale: the state side of the merge arrives

@@ -138,19 +138,11 @@ def select_geofence_arm(
     divided by ``executors`` for the per-box figure the crossover was
     measured at — pass ``spark`` to derive it the same way
     ``session.select_state_store`` does (local masters: 1, the
-    default when neither is given). The existing
-    ``SPARK_GRAFT_GEOFENCE_BUCKETS`` env pin (the same one bench.py
-    and tools/stream_scale.py route through) wins when set: ``0``
-    forces the per-user arm, a positive integer forces that bucket
-    count.
+    default when neither is given). A caller that wants a fixed arm
+    passes ``state_buckets`` to :func:`geofence_alert_stream` itself.
     """
     import math
-    import os
 
-    env = os.environ.get("SPARK_GRAFT_GEOFENCE_BUCKETS", "")
-    if env:
-        b = int(env)
-        return b if b > 0 else None
     if executors is None:
         if spark is not None:
             from pulsar_spark_spark.session import executor_count
@@ -207,14 +199,12 @@ def geofence_alert_stream(
     per-key timeouts matter more than dispatch count.
     :func:`select_geofence_arm` turns an estimated key cardinality
     into this argument automatically (measured crossover ~150k
-    keys/box; the ``SPARK_GRAFT_GEOFENCE_BUCKETS`` env pin wins).
+    keys/box).
     """
     if state_buckets is not None:
         if state_buckets <= 0:
             # pmod(x, 0) is NULL — every user would collapse into ONE
-            # state group. The 0-means-per-user convention lives in
-            # select_geofence_arm / the env pin; by the time a bucket
-            # count reaches this argument it must be positive.
+            # state group; the per-user arm is None, never 0.
             raise ValueError(
                 f"state_buckets must be positive, got {state_buckets} "
                 "(pass None for the per-user arm)"

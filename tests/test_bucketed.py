@@ -637,25 +637,25 @@ def test_refinement_bucketed_arm_parity_and_no_shuffle(
     plan carries ZERO shuffle Exchanges (the per-run user_id join
     shuffle and the kernel's delivery_id shuffle both moved to layout
     write time; only an AQE broadcast of the small side may remain)."""
+    from pulsar_spark_spark.plans import QUERIES, kernels
     from pulsar_spark_spark.plans.kernels import (
         _refinement_input,
         _refinement_results,
         ensure_refinement_layout,
     )
-    from pulsar_spark_spark.plans import QUERIES
 
     sf = "/root/testdata/sf0.001"
     monkeypatch.setenv("SPARK_GRAFT_INDEX_ROOT", str(tmp_path))
     table = ensure_refinement_layout(spark, sf)
     try:
         for q in ("delivery_refinement", "delivery_refined_history"):
-            monkeypatch.setenv("SPARK_GRAFT_REFINE_ARM", "plain")
             plain = [tuple(r) for r in QUERIES[q](spark, sf).collect()]
-            monkeypatch.setenv("SPARK_GRAFT_REFINE_ARM", "bucketed")
-            bucketed = [tuple(r) for r in QUERIES[q](spark, sf).collect()]
+            with monkeypatch.context() as m:
+                m.setattr(kernels, "_REFINE_LAYOUT_FLOOR_ROWS", -1)
+                bucketed = [tuple(r) for r in QUERIES[q](spark, sf).collect()]
             assert plain == bucketed, q
             assert len(plain) > 0, q
-        monkeypatch.setenv("SPARK_GRAFT_REFINE_ARM", "bucketed")
+        monkeypatch.setattr(kernels, "_REFINE_LAYOUT_FLOOR_ROWS", -1)
         pts, from_layout = _refinement_input(spark, sf)
         assert from_layout
         res = _refinement_results(
@@ -668,25 +668,29 @@ def test_refinement_bucketed_arm_parity_and_no_shuffle(
 
 
 def test_refinement_arm_routing(spark, tmp_path, monkeypatch):
-    """'auto' keeps every gate/bench corpus on the committed plain
-    plan (events rows <= floor); explicit arms override; an unknown
-    arm raises."""
-    import pytest
-
+    """The floor keeps every gate/bench corpus on the committed plain
+    plan (events rows <= floor); a corpus above it serves from the
+    layout."""
+    from pulsar_spark_spark.plans import kernels
     from pulsar_spark_spark.plans.kernels import (
         _REFINE_LAYOUT_FLOOR_ROWS,
         _events_rows,
         _refinement_input,
+        ensure_refinement_layout,
     )
 
     sf = "/root/testdata/sf0.001"
     assert _events_rows(sf) <= _REFINE_LAYOUT_FLOOR_ROWS
-    monkeypatch.delenv("SPARK_GRAFT_REFINE_ARM", raising=False)
     _pts, from_layout = _refinement_input(spark, sf)
     assert not from_layout
-    monkeypatch.setenv("SPARK_GRAFT_REFINE_ARM", "nope")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_REFINE_ARM"):
-        _refinement_input(spark, sf)
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_ROOT", str(tmp_path))
+    monkeypatch.setattr(kernels, "_REFINE_LAYOUT_FLOOR_ROWS", -1)
+    table = ensure_refinement_layout(spark, sf)
+    try:
+        _pts, from_layout = _refinement_input(spark, sf)
+        assert from_layout
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_geotag_bucketed_arm_parity_and_state_no_exchange(
@@ -700,7 +704,7 @@ def test_geotag_bucketed_arm_parity_and_state_no_exchange(
     UNIQUES for the cap window, and the presentation sort."""
     import re
 
-    from pulsar_spark_spark.plans import QUERIES
+    from pulsar_spark_spark.plans import QUERIES, geo
     from pulsar_spark_spark.plans.geo import (
         _geotag_merge_from_layout,
         ensure_geotag_state_layout,
@@ -710,9 +714,8 @@ def test_geotag_bucketed_arm_parity_and_state_no_exchange(
     monkeypatch.setenv("SPARK_GRAFT_INDEX_ROOT", str(tmp_path))
     table = ensure_geotag_state_layout(spark, sf)
     try:
-        monkeypatch.setenv("SPARK_GRAFT_GEOTAG_ARM", "plain")
         plain = QUERIES["geotag_history_merge"](spark, sf).collect()
-        monkeypatch.setenv("SPARK_GRAFT_GEOTAG_ARM", "bucketed")
+        monkeypatch.setattr(geo, "_GEOTAG_LAYOUT_FLOOR_ROWS", -1)
         bucketed = QUERIES["geotag_history_merge"](spark, sf).collect()
         key = lambda r: (r["user_id"], r["ts"], r["event_id"])  # noqa: E731
         assert sorted(map(tuple, plain), key=lambda t: (t[0], t[2], t[1])) \
@@ -751,7 +754,7 @@ def test_geotag_arms_drop_null_event_type(spark, tmp_path, monkeypatch):
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from pulsar_spark_spark.plans import ORACLES, QUERIES
+    from pulsar_spark_spark.plans import ORACLES, QUERIES, geo
     from pulsar_spark_spark.plans.geo import ensure_geotag_state_layout
 
     sf = tmp_path / "sf"
@@ -767,8 +770,8 @@ def test_geotag_arms_drop_null_event_type(spark, tmp_path, monkeypatch):
     null_ids = set(pc.filter(ev["event_id"], null_rows).to_pylist())
     monkeypatch.setenv("SPARK_GRAFT_INDEX_ROOT", str(tmp_path / "idx"))
 
-    def rows(arm):
-        monkeypatch.setenv("SPARK_GRAFT_GEOTAG_ARM", arm)
+    def rows(floor):
+        monkeypatch.setattr(geo, "_GEOTAG_LAYOUT_FLOOR_ROWS", floor)
         return sorted(
             (r["user_id"], r["event_id"], round(r["lat"], 9),
              round(r["lng"], 9), r["accuracy"])
@@ -777,7 +780,8 @@ def test_geotag_arms_drop_null_event_type(spark, tmp_path, monkeypatch):
 
     table = ensure_geotag_state_layout(spark, str(sf))
     try:
-        plain, bucketed = rows("plain"), rows("bucketed")
+        plain = rows(geo._GEOTAG_LAYOUT_FLOOR_ROWS)
+        bucketed = rows(-1)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
     con = duckdb.connect()
@@ -794,22 +798,24 @@ def test_geotag_arms_drop_null_event_type(spark, tmp_path, monkeypatch):
     assert plain == bucketed == oracle
 
 
-def test_geotag_arm_routing(spark, monkeypatch):
-    """'auto' keeps every gate/bench corpus on the committed plain
-    plan; an unknown arm raises."""
-    import pytest
-
-    from pulsar_spark_spark.plans import QUERIES
-    from pulsar_spark_spark.plans.geo import (
-        _GEOTAG_LAYOUT_FLOOR_ROWS,
-    )
+def test_geotag_arm_routing(spark, tmp_path, monkeypatch):
+    """The floor keeps every gate/bench corpus on the committed plain
+    plan; a corpus above it merges against the bucketed state layout."""
+    from pulsar_spark_spark.plans import QUERIES, geo
+    from pulsar_spark_spark.plans.geo import ensure_geotag_state_layout
     from pulsar_spark_spark.plans.kernels import _events_rows
 
     sf = "/root/testdata/sf0.001"
-    assert _events_rows(sf) <= _GEOTAG_LAYOUT_FLOOR_ROWS
-    monkeypatch.setenv("SPARK_GRAFT_GEOTAG_ARM", "nope")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_GEOTAG_ARM"):
-        QUERIES["geotag_history_merge"](spark, sf)
+    assert _events_rows(sf) <= geo._GEOTAG_LAYOUT_FLOOR_ROWS
+    assert "geotag_state" not in _plan(QUERIES["geotag_history_merge"](spark, sf))
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_ROOT", str(tmp_path))
+    monkeypatch.setattr(geo, "_GEOTAG_LAYOUT_FLOOR_ROWS", -1)
+    table = ensure_geotag_state_layout(spark, sf)
+    try:
+        plan = _plan(QUERIES["geotag_history_merge"](spark, sf))
+        assert "geotag_state" in plan, plan
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_ensure_index_fingerprints_named_source(tmp_path):

@@ -346,3 +346,35 @@ def test_rescore_reads_each_batch_once(spark, tmp_path):
     assert q.awaitTermination(120)
     per_batch = {p["batchId"]: p["numInputRows"] for p in q.recentProgress}
     assert [per_batch[b] for b in sorted(per_batch)] == [len(c) for c in chunks]
+
+
+def test_rescore_keeps_updates_after_older_duplicate(spark, tmp_path):
+    """A batch that brings an older duplicate of the stored newest
+    triple replaces that point (first occurrence wins), so the merged
+    history's newest point falls below the stored record's version.
+    The version is greatest(stored version, newest batch point), so
+    that update and the next batch's one both reach the state."""
+    src = str(tmp_path / "src")
+    os.makedirs(src, exist_ok=True)
+    chunks = [
+        [(1, 1, 1_000, 10.0, 20.0, 30.0), (1, 2, 2_000, 10.1, 20.1, 30.0)],
+        # event 3 duplicates event 2's triple 500 ms earlier; event 4
+        # is new but still older than event 2
+        [(1, 3, 1_500, 10.1, 20.1, 30.0), (1, 4, 1_800, 10.2, 20.2, 30.0)],
+        [(1, 5, 1_900, 10.3, 20.3, 30.0)],
+    ]
+    for i, c in enumerate(chunks):
+        _write_chunk(spark, c, src, f"c{i}")
+    stream = spark.readStream.schema(SCHEMA).option(
+        "maxFilesPerTrigger", "1"
+    ).parquet(src)
+    state = str(tmp_path / "state")
+    q = run_geotag_rescore_stream(
+        stream, state, str(tmp_path / "ckpt"), history_cap=CAP
+    )
+    assert q.awaitTermination(120)
+    (r,) = read_upsert_table(spark, state).collect()
+    hist = [(h["ts_ms"], h["event_id"]) for h in r["history"]]
+    want = [(p[0], p[1]) for p in _fold(chunks)[1][3]]
+    assert hist == want == [(1_000, 1), (1_500, 3), (1_800, 4), (1_900, 5)]
+    assert (r["version"]["ts_ms"], r["version"]["event_id"]) == (2_000, 2)

@@ -91,8 +91,8 @@ def test_stateful_geofence_matches_batch(spark, tmp_path):
 
 
 def test_session_stream_rocksdb(spark, tmp_path):
-    """The RocksDB state-store arm (SPARK_GRAFT_STATE_STORE=rocksdb in
-    session.py — here set at runtime, which Spark honors per query)
+    """The RocksDB state-store arm (select_state_store's choice above
+    the crossover — here set at runtime, which Spark honors per query)
     must produce bit-identical alerts to the default HDFS-backed
     provider: the provider swaps the state BACKEND only. This is the
     cluster-scale arm for 1e8+ keyed sessions where on-heap state
@@ -221,18 +221,16 @@ def test_bucketed_geofence_arm_full_parity(spark, tmp_path):
     assert {k: v[:4] for k, v in got_bucketed.items()} == want
 
 
-def test_select_geofence_arm_auto_rule(monkeypatch):
+def test_select_geofence_arm_auto_rule():
     """Round 14 follow-through on r13 VERDICT missing #1: the
     geofence machine's bucketed arm auto-selects from estimated key
     cardinality at the measured ~150k-keys/box dead-heat cell
-    (stream_scale.json: per-user wins below, bucketed x2.8 at 1.5M);
-    an explicit env pin always wins."""
+    (stream_scale.json: per-user wins below, bucketed x2.8 at 1.5M)."""
     from pulsar_spark_spark.streaming.stateful import (
         GEOFENCE_BUCKET_CROSSOVER_KEYS,
         select_geofence_arm,
     )
 
-    monkeypatch.delenv("SPARK_GRAFT_GEOFENCE_BUCKETS", raising=False)
     # below the crossover: per-user machine
     assert select_geofence_arm(1_500) is None
     assert select_geofence_arm(149_999) is None
@@ -243,11 +241,6 @@ def test_select_geofence_arm_auto_rule(monkeypatch):
     assert select_geofence_arm(10**9) == 65536
     # cluster attribution: 16 boxes put 1.5M keys under the crossover
     assert select_geofence_arm(1_500_000, executors=16) is None
-    # the operator's existing env pin beats any estimate
-    monkeypatch.setenv("SPARK_GRAFT_GEOFENCE_BUCKETS", "0")
-    assert select_geofence_arm(10**9) is None
-    monkeypatch.setenv("SPARK_GRAFT_GEOFENCE_BUCKETS", "8192")
-    assert select_geofence_arm(10) == 8192
 
 
 def test_bucketed_geofence_rejects_bucket_count_change(spark, tmp_path):

@@ -591,7 +591,7 @@ def test_min_label_raises_beyond_iteration_budget(spark):
 def test_component_walk_auto_falls_back_to_star_on_deep_graph(
     spark, monkeypatch
 ):
-    """cc='auto' (the registered queries' default since round 8) must
+    """component_walk (the registered queries' walk since round 8) must
     survive a component deeper than min-label's budget by switching to
     the star walk instead of failing the pipeline — the 10×-scale
     rolled-replica embedding corpus hit exactly this. The round-15
@@ -616,12 +616,10 @@ def test_component_walk_auto_falls_back_to_star_on_deep_graph(
     labels = component_walk(edges).collect()
     assert {r["node"] for r in labels} == set(range(101))
     assert all(r["component"] == 0 for r in labels)
-    with _pytest.raises(ValueError, match="min_label/star/auto"):
-        component_walk(edges, cc="bogus")
 
 
 def test_component_walk_auto_local_arm_matches_distributed(spark):
-    """Round 15: under the edge bound, cc='auto' resolves by
+    """Round 15: under the edge bound, component_walk resolves by
     driver-local union-find — exactly the labels min-label produces,
     including self-loop-only node dropping and min-id components."""
     import random
@@ -690,44 +688,6 @@ def test_hot_bucket_stats_reports_what_cap_drops(spark):
     assert [(r["band_key"], r["n_rows"]) for r in stats] == [("hot", 5)]
     kept = cap_hot_buckets(banded, ["band_key"], cap=3).collect()
     assert {r["band_key"] for r in kept} == {"cold"}
-
-
-def test_knob_branches_match_defaults(spark):
-    """The A/B knobs' non-default branches (agg-mode cap, self-seed CC
-    init) and the cc='star' wiring must produce exactly the default
-    results — they exist for re-measurement, not as divergent
-    semantics."""
-    from pulsar_spark_spark.plans import text
-    from pulsar_spark_spark.plans.text import doc_components, near_dup_candidates
-
-    docs = _copy_heavy_corpus(spark, n_copies=30, n_distinct=12)
-    want_cand = {
-        (r["rep_a"], r["rep_b"])
-        for r in near_dup_candidates(docs, band_cap=3)[2].collect()
-    }
-    want_comp = {
-        (r["node"], r["component"]) for r in doc_components(docs).collect()
-    }
-    try:
-        text._CAP_MODE = "agg"
-        got_cand = {
-            (r["rep_a"], r["rep_b"])
-            for r in near_dup_candidates(docs, band_cap=3)[2].collect()
-        }
-        text._CC_INIT = "self"
-        got_comp = {
-            (r["node"], r["component"]) for r in doc_components(docs).collect()
-        }
-    finally:
-        text._CAP_MODE = "window"
-        text._CC_INIT = "nbr_min"
-    assert got_cand == want_cand
-    assert got_comp == want_comp
-    star_comp = {
-        (r["node"], r["component"])
-        for r in doc_components(docs, cc="star").collect()
-    }
-    assert star_comp == want_comp
 
 
 def test_docs_rows_count_fallback_opt_out(spark, tmp_path):

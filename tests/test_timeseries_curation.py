@@ -147,3 +147,52 @@ def test_doc_curation_carries_both_stage_column_families(spark):
     ).all()
     s = merged[merged["n_stratum"].notna()]
     assert sorted(s["doc_id"]) == sorted(samp["doc_id"])
+
+
+def test_decontamination_gate_bounds_grams_not_documents(
+    spark, tmp_path, monkeypatch
+):
+    """The benchmark side's broadcast gate bounds the gram rows the
+    footers imply, not the document count: two corpora of 50
+    documents each, one of 12-word and one of 1,500-word documents.
+    Under a 1,000-row bound the short corpus broadcasts straight from
+    the footer estimate; the long one exceeds it and takes the
+    counted guard."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pulsar_spark_spark.operators import checkpoint
+    from pulsar_spark_spark.plans import curation
+
+    rng = random.Random(8)
+    vocab = [f"w{chr(97 + i)}{chr(97 + j)}" for i in range(26) for j in range(26)]
+    counted = []
+    real_guard = checkpoint.broadcast_if_bounded
+
+    def spy(df, max_rows=5_000_000):
+        counted.append(max_rows)
+        return real_guard(df, max_rows)
+
+    monkeypatch.setattr(checkpoint, "broadcast_if_bounded", spy)
+    monkeypatch.setattr(
+        curation, "_BENCH_BROADCAST_MAX_ROWS", 1_000, raising=False
+    )
+    for name, words in [("short", 12), ("long", 1_500)]:
+        sf = tmp_path / name
+        sf.mkdir()
+        texts = [" ".join(rng.choices(vocab, k=words)) for _ in range(50)]
+        pq.write_table(
+            pa.table({
+                "doc_id": list(range(50)),
+                "text": texts,
+                "lang": ["en"] * 50,
+                "source": ["s"] * 50,
+                "n_chars": [len(t) for t in texts],
+            }),
+            sf / "documents.parquet",
+        )
+        counted.clear()
+        curation.doc_decontamination(spark, str(sf)).collect()
+        assert counted == ([] if name == "short" else [1_000]), name

@@ -24,10 +24,12 @@ Usage:  python tools/scale_slope.py [query-substring ...]
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
 import time
+from unittest import mock
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -177,7 +179,7 @@ def _time_query(spark, name: str, sf_dir: str, runs: int) -> float:
         from pulsar_spark_spark.plans.similarity import ensure_lsh_index
 
         ensure_lsh_index(spark, sf_dir)
-    pinned_arm = None
+    floor = contextlib.nullcontext()
     if name in ("delivery_refinement", "delivery_refined_history"):
         # round 11: measure the BUCKETED serve arm at every decade
         # (including the sf0.1 base, so the slope is one arm's slope)
@@ -186,43 +188,27 @@ def _time_query(spark, name: str, sf_dir: str, runs: int) -> float:
         # recurring-rescore shape the reference runs every 120 min;
         # the plain arm's per-run shuffle+projection slope is the
         # pre-round-11 sidecar history.
-        from pulsar_spark_spark.plans.kernels import (
-            ensure_refinement_layout,
-        )
+        from pulsar_spark_spark.plans import kernels
 
-        ensure_refinement_layout(spark, sf_dir)
-        pinned_arm = os.environ.get("SPARK_GRAFT_REFINE_ARM")
-        os.environ["SPARK_GRAFT_REFINE_ARM"] = "bucketed"
-    pinned_geotag = None
+        kernels.ensure_refinement_layout(spark, sf_dir)
+        floor = mock.patch.object(kernels, "_REFINE_LAYOUT_FLOOR_ROWS", -1)
     if name == "geotag_history_merge":
         # round 12: measure the recurring-merge serve arm (deduped
         # state bucketed by user_id) at every decade with the layout
         # build outside the timed region — the same offline-build
         # discipline as the refinement arm above. The plain arm's
         # full-corpus two-window slope is the pre-round-12 history.
-        from pulsar_spark_spark.plans.geo import ensure_geotag_state_layout
+        from pulsar_spark_spark.plans import geo
 
-        ensure_geotag_state_layout(spark, sf_dir)
-        pinned_geotag = os.environ.get("SPARK_GRAFT_GEOTAG_ARM")
-        os.environ["SPARK_GRAFT_GEOTAG_ARM"] = "bucketed"
-    try:
+        geo.ensure_geotag_state_layout(spark, sf_dir)
+        floor = mock.patch.object(geo, "_GEOTAG_LAYOUT_FLOOR_ROWS", -1)
+    with floor:
         best = float("inf")
         for _ in range(runs):
             spark.catalog.clearCache()
             t0 = time.time()
             QUERIES[name](spark, sf_dir).count()
             best = min(best, time.time() - t0)
-    finally:
-        if name in ("delivery_refinement", "delivery_refined_history"):
-            if pinned_arm is None:
-                os.environ.pop("SPARK_GRAFT_REFINE_ARM", None)
-            else:
-                os.environ["SPARK_GRAFT_REFINE_ARM"] = pinned_arm
-        if name == "geotag_history_merge":
-            if pinned_geotag is None:
-                os.environ.pop("SPARK_GRAFT_GEOTAG_ARM", None)
-            else:
-                os.environ["SPARK_GRAFT_GEOTAG_ARM"] = pinned_geotag
     return best
 
 
@@ -352,9 +338,9 @@ def main(filters) -> None:
     # The doc corpus family's big-scale points run mapInArrow tiers —
     # on local[N] that is N JVM threads + N Python workers on N cores,
     # a ~25% oversubscription tax on the Arrow-dominated stages
-    # (SCALE.md round 10). Rounds 10-11 measured them under the
-    # session-wide SPARK_GRAFT_ARROW_PROFILE knob (halved task slots),
-    # which also DOUBLED their pure-JVM stage walls; since round 12
+    # (SCALE.md round 10). Rounds 10-11 measured them under a
+    # session-wide halving of the task slots (since deleted), which
+    # also DOUBLED their pure-JVM stage walls; since round 12
     # the tier plans cap their own Arrow-stage width per stage
     # (session.arrow_stage_width), so every query runs in the standard
     # full-width session and mixed pipelines get both stage shapes'
@@ -690,7 +676,7 @@ def _summarize_and_render(results: dict, scales) -> None:
         "recurring-merge arm (state stored DEDUPED — every unique",
         "(user,lat,lng,accuracy) triple with its first-occurrence",
         "(ts,event_id) — bucketed by user_id; merge = full-outer",
-        "min(struct) join + cap window; SPARK_GRAFT_GEOTAG_ARM,",
+        "min(struct) join + cap window; layout floor patched,",
         "layout built untimed): the state side carries ZERO Exchange",
         "(pinned in tests/test_bucketed.py), the corpus never",
         "re-shuffles, 1000× 65.1→19.6 s, last decade ×3.0.",

@@ -33,8 +33,8 @@ Usage:  python tools/stream_scale.py [ingest|session|geofence ...]
            same 10M-row budget to locate it)
         python tools/stream_scale.py --bucketed [--budgeted] geofence
           (round 14, r13 VERDICT missing #1: the bucketed-state
-           geofence arm — state keyed by hash(user_id) % B, default
-           B=4096 via SPARK_GRAFT_GEOFENCE_BUCKETS — amortizing the
+           geofence arm — state keyed by hash(user_id) % B, B=4096
+           passed as the bench's state_buckets — amortizing the
            ~1.2M-per-batch per-group Python dispatches that bind the
            fourth-decade cells)
 """
@@ -150,43 +150,57 @@ def _budgeted_events_dir(
 def main(filters) -> None:
     import bench  # the driver-facing bench module, reused verbatim
 
-    from pulsar_spark_spark.session import get_session
+    from pulsar_spark_spark.session import (
+        _ROCKSDB_PROVIDER,
+        _STATE_STORE_KEY,
+        get_session,
+    )
+    from pulsar_spark_spark.streaming.stateful import (
+        session_stream,
+        session_stream_native,
+    )
 
     rocksdb = "--rocksdb" in filters
     budgeted = "--budgeted" in filters
     midpoint = "--midpoint" in filters
     # round 13 (r12 VERDICT missing #3): --native routes the session
-    # bench through the JVM-native streaming session_window arm
-    # (bench reads SPARK_GRAFT_SESSIONIZER) — the fourth-decade
-    # sessionizer cell timed out under BOTH stores because of
-    # per-group Python dispatch, which this arm removes
+    # bench through the JVM-native streaming session_window arm — the
+    # fourth-decade sessionizer cell timed out under BOTH stores
+    # because of per-group Python dispatch, which this arm removes
     native = "--native" in filters
-    if native:
-        os.environ["SPARK_GRAFT_SESSIONIZER"] = "native"
+    sessionizer = session_stream_native if native else session_stream
     # round 14 (r13 VERDICT missing #1): --bucketed routes the
-    # geofence bench through the bucketed-state arm (bench reads
-    # SPARK_GRAFT_GEOFENCE_BUCKETS) — the fourth-decade geofence
-    # cells are bound by ~1.2M per-group Python dispatches per batch,
-    # which keying the state by hash(user_id) % B amortizes to B
+    # geofence bench through the bucketed-state arm — the
+    # fourth-decade geofence cells are bound by ~1.2M per-group
+    # Python dispatches per batch, which keying the state by
+    # hash(user_id) % B amortizes to B
     bucketed_arm = "--bucketed" in filters
-    if bucketed_arm:
-        os.environ.setdefault("SPARK_GRAFT_GEOFENCE_BUCKETS", "4096")
+    state_buckets = 4096 if bucketed_arm else None
     filters = [f for f in filters if not f.startswith("--")]
     which = [s for s in STREAMS if not filters or any(f in s for f in filters)]
     fns = {
         "ingest": bench._stream_ingest_bench,
-        "session": bench._session_stream_bench,
-        "geofence": bench._geofence_stream_bench,
+        "session": lambda spark: bench._session_stream_bench(spark, sessionizer),
+        "geofence": lambda spark: bench._geofence_stream_bench(
+            spark, state_buckets
+        ),
     }
     out_path = os.path.join(ROOT, "stream_scale.json")
     rows = {}
     if os.path.exists(out_path):
         rows = json.load(open(out_path)).get("rows", {})
-    def capture(name, label, sf_dir, factor, extra=None):
+    def capture(name, label, sf_dir, factor, extra=None, store="hdfs"):
+        # the RocksDB provider rides the session conf, which Spark
+        # honors per started query (session.py's state-store note)
         bench.SF_DIR = sf_dir
         spark = get_session(
             app_name=f"stream_scale_{name}_{label}",
             master=f"local[{CPUS}]",
+            extra_conf=(
+                {_STATE_STORE_KEY: _ROCKSDB_PROVIDER}
+                if store == "rocksdb"
+                else None
+            ),
         )
         try:
             t0 = time.time()
@@ -225,51 +239,44 @@ def main(filters) -> None:
             spark.stop()
         stores = ["rocksdb"] if rocksdb else ["hdfs", "rocksdb"]
         for store in stores:
-            if store == "rocksdb":
-                os.environ["SPARK_GRAFT_STATE_STORE"] = "rocksdb"
-            try:
-                for name in which:
-                    if name == "ingest":
-                        continue
-                    capture(
-                        name,
-                        f"sf100@midpoint+{store}",
-                        mid_dir,
-                        1000,
-                        {
-                            "row_budget": SF100_ROW_BUDGET,
-                            "user_mod": user_mod,
-                            "state_store": store,
-                            "methodology": (
-                                "user_id-hash subset (1 of "
-                                f"{user_mod} buckets: ~500k of the 1.5M "
-                                "users) of the 1000x events table, then "
-                                "a uniform event_id-hash row sample to "
-                                "the budget - the state-store crossover "
-                                "midpoint cell"
-                            ),
-                        },
-                    )
-            finally:
-                os.environ.pop("SPARK_GRAFT_STATE_STORE", None)
-    elif rocksdb and not budgeted:
-        # VERDICT round-11 missing #3: the RocksDB arm side by side
-        # with the HDFS-store row at the 100× state point — one env
-        # flip, same pipelines (session.py routes the provider class)
-        os.environ["SPARK_GRAFT_STATE_STORE"] = "rocksdb"
-        try:
             for name in which:
                 if name == "ingest":
-                    continue  # ingest is stateless — no store to A/B
+                    continue
                 capture(
                     name,
-                    "sf10+rocksdb",
-                    os.path.join(ROOT, ".scale", "sf10"),
-                    100,
-                    {"state_store": "rocksdb"},
+                    f"sf100@midpoint+{store}",
+                    mid_dir,
+                    1000,
+                    {
+                        "row_budget": SF100_ROW_BUDGET,
+                        "user_mod": user_mod,
+                        "state_store": store,
+                        "methodology": (
+                            "user_id-hash subset (1 of "
+                            f"{user_mod} buckets: ~500k of the 1.5M "
+                            "users) of the 1000x events table, then "
+                            "a uniform event_id-hash row sample to "
+                            "the budget - the state-store crossover "
+                            "midpoint cell"
+                        ),
+                    },
+                    store,
                 )
-        finally:
-            os.environ.pop("SPARK_GRAFT_STATE_STORE", None)
+    elif rocksdb and not budgeted:
+        # VERDICT round-11 missing #3: the RocksDB arm side by side
+        # with the HDFS-store row at the 100× state point — one conf
+        # flip, same pipelines
+        for name in which:
+            if name == "ingest":
+                continue  # ingest is stateless — no store to A/B
+            capture(
+                name,
+                "sf10+rocksdb",
+                os.path.join(ROOT, ".scale", "sf10"),
+                100,
+                {"state_store": "rocksdb"},
+                "rocksdb",
+            )
     elif budgeted:
         # VERDICT round-11 missing #2: fourth-decade session/geofence
         # cells at the FULL 1000× state cardinality over a bounded
@@ -295,38 +302,34 @@ def main(filters) -> None:
                     else ""
                 )
             )
-        if rocksdb:
-            os.environ["SPARK_GRAFT_STATE_STORE"] = "rocksdb"
+        store = "rocksdb" if rocksdb else "hdfs"
+        dirs = {}
+        spark = get_session(app_name="stream_budget_sample")
         try:
-            dirs = {}
-            spark = get_session(app_name="stream_budget_sample")
-            try:
-                for b in sorted(set(budgets.values())):
-                    dirs[b] = _budgeted_events_dir(spark, sf100, b)
-            finally:
-                spark.stop()
-            for name in which:
-                if name == "ingest":
-                    continue
-                b = budgets[name]
-                capture(
-                    name,
-                    f"sf100@budget{suffix_for(name)}",
-                    dirs[b],
-                    1000,
-                    {
-                        "row_budget": b,
-                        "state_store": "rocksdb" if rocksdb else "hdfs",
-                        "methodology": (
-                            "uniform event_id-hash sample of the 1000x "
-                            "events table: full ~1.5M-user state "
-                            "cardinality, bounded row count"
-                        ),
-                    },
-                )
+            for b in sorted(set(budgets.values())):
+                dirs[b] = _budgeted_events_dir(spark, sf100, b)
         finally:
-            if rocksdb:
-                os.environ.pop("SPARK_GRAFT_STATE_STORE", None)
+            spark.stop()
+        for name in which:
+            if name == "ingest":
+                continue
+            b = budgets[name]
+            capture(
+                name,
+                f"sf100@budget{suffix_for(name)}",
+                dirs[b],
+                1000,
+                {
+                    "row_budget": b,
+                    "state_store": store,
+                    "methodology": (
+                        "uniform event_id-hash sample of the 1000x "
+                        "events table: full ~1.5M-user state "
+                        "cardinality, bounded row count"
+                    ),
+                },
+                store,
+            )
     else:
         for label, sf_dir, factor in SCALES:
             if not os.path.isdir(sf_dir):
@@ -337,7 +340,7 @@ def main(filters) -> None:
                 )
                 continue
             for name in which:
-                extra = None
+                extra, store = None, "hdfs"
                 if label in SCALE_STREAMS and name not in SCALE_STREAMS[label]:
                     # round 14 (r13 VERDICT stretch): the UNBUDGETED
                     # 100M-row fourth-decade sessionizer cell is only
@@ -354,7 +357,7 @@ def main(filters) -> None:
                     # located key crossover too — so the cell runs
                     # under RocksDB, the same arm select_state_store
                     # picks there
-                    os.environ["SPARK_GRAFT_STATE_STORE"] = "rocksdb"
+                    store = "rocksdb"
                     extra = {
                         "state_store": "rocksdb",
                         "methodology": (
@@ -372,11 +375,7 @@ def main(filters) -> None:
                         else ""
                     )
                 )
-                try:
-                    capture(name, cell, sf_dir, factor, extra)
-                finally:
-                    if extra is not None:
-                        os.environ.pop("SPARK_GRAFT_STATE_STORE", None)
+                capture(name, cell, sf_dir, factor, extra, store)
     with open(out_path, "w") as f:
         json.dump({"cpus": CPUS, "rows": rows}, f, indent=1, sort_keys=True)
     print(f"-> {out_path}")
